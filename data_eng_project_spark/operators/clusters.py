@@ -13,22 +13,23 @@ Scale design: each round is one join + one groupBy (shuffle on node id —
 AQE-coalesced); lineage is cut every round with a *lazy*
 ``localCheckpoint`` so the plan doesn't grow unboundedly; convergence is
 detected from a 1-row aggregate (sum of labels, strictly decreasing
-until fixpoint) — no data rows ever reach the driver. Driver-sync
-economy (round-2 verdict item): the checkpoint is eager=False, so the
-convergence aggregate is the ONE action that both materializes the
-round and reads the fixpoint signal, and it only runs every second
-round — min-label propagation is monotone, so a sum unchanged across
-two rounds still certifies the fixpoint, and the worst case is one
-redundant (cheap, already-converged) round. Net: 1 driver round-trip
-per 2 rounds, vs 2 per round for the eager-checkpoint + per-round-
-collect formulation. The first propagation round is fused into label
-initialization (a single groupBy over the edge list), and every
-subsequent round pointer-jumps (path halving), so chains collapse in
-O(log diameter) rounds. This is the DataFrame variant of the classic
-Pregel-style label propagation; for adversarial billion-edge graphs
-you'd switch to the large-star/small-star alternation (Kiveris et al.,
-"Connected Components in MapReduce and Beyond"), which bounds rounds at
-O(log n) on any topology.
+until fixpoint) — no data rows ever reach the driver. The aggregate is
+the one action that both materializes the round and reads the fixpoint
+signal, and it runs every round: under AQE the checkpoint's shuffle
+costs a job whether or not the sum is read, so testing only every
+second round saved nothing and overshot the fixpoint by a round (on the
+staged dup graph: 2 rounds and 22 jobs instead of 4 and 34, CHANGES.md).
+The first propagation round is fused into label initialization (a
+single groupBy over the edge list), and every subsequent round
+pointer-jumps (path halving), so chains collapse in O(log diameter)
+rounds. This is the DataFrame variant of the classic Pregel-style label
+propagation; for adversarial billion-edge graphs you'd switch to the
+large-star/small-star alternation (Kiveris et al., "Connected Components
+in MapReduce and Beyond"), which bounds rounds at O(log n) on any
+topology.
+
+PageRank reuses the components: it solves each component as one row
+(see ``pagerank``), so its ten rounds cost no jobs of their own.
 """
 
 from __future__ import annotations
@@ -60,7 +61,7 @@ def connected_components(
         F.least(F.col("src"), F.min("dst")).alias("comp")
     ).select(F.col("src").alias("id"), "comp")
     prev_sum = None
-    for rnd in range(max_iter):
+    for _ in range(max_iter):
         neighbor_min = (
             sym.join(labels, sym["dst"] == labels["id"])
             .groupBy("src")
@@ -84,14 +85,10 @@ def connected_components(
         # Lazy lineage cut: the convergence aggregate below is the action
         # that materializes it (one job, not checkpoint-job + agg-job).
         labels = labels.localCheckpoint(eager=False)
-        # Convergence test every 2nd round (and on the last): monotone
-        # labels ⇒ sum equal across two rounds still proves the fixpoint;
-        # overshoot is at most one no-op round of joins.
-        if rnd % 2 == 1 or rnd == max_iter - 1:
-            cur_sum = labels.agg(F.sum("comp")).collect()[0][0]
-            if cur_sum == prev_sum:  # min-propagation monotone ⇒ fixpoint
-                break
-            prev_sum = cur_sum
+        cur_sum = labels.agg(F.sum("comp")).collect()[0][0]
+        if cur_sum == prev_sum:  # min-propagation monotone ⇒ fixpoint
+            break
+        prev_sum = cur_sum
     return labels.select("id", "comp")
 
 
@@ -114,62 +111,96 @@ def pagerank(
     dst_col: str = "id_b",
     damping: float = 0.85,
     n_iter: int = 10,
+    components: DataFrame | None = None,
 ) -> DataFrame:
     """PageRank over the undirected pair graph (each edge walked both
     ways), fixed-iteration power method — centrality weighting for
     dup/similarity graphs (e.g. prioritize the most-connected document
     of a near-dup family, or weight corpus items by graph popularity).
 
-    Deterministic and driver-sync-free: exactly ``n_iter`` rounds, no
-    convergence collect (unlike connected_components there is no
-    monotone 1-row fixpoint certificate for PR, so a tolerance test
-    would cost one driver action per round — a fixed iteration budget
-    is the standard scale posture). Each round is one equi-join
-    (ranks ⋈ out-degree-normalized edges) + one groupBy — the classic
-    Pregel matvec as DataFrame algebra; lineage is cut per round with a
-    lazy localCheckpoint so the plan stays bounded.
+    Solved per connected component, all rounds in one stage: the
+    symmetrized graph has no dangling nodes and the (1−d)/N teleport is
+    uniform over all N nodes, so every component keeps mass |c|/N on
+    every round and a node's rank depends only on its own component
+    plus N. Each component becomes ONE row — node ids in id order, and
+    per node its neighbours as (index inside the component,
+    1/out_degree) structs — and the ``n_iter`` rounds run as an
+    ``aggregate`` over ``sequence(1, n_iter)`` with the rank array as
+    accumulator (the HOF idiom of kmeans_lloyd). N arrives as a
+    broadcast one-row count.
+    Building the plan runs no Spark job when ``components`` is given,
+    and nothing is persisted or checkpointed; in-mass sums run in
+    neighbour-index order, with the same per-term arithmetic as a
+    global join+groupBy matvec.
 
-    Isolated nodes don't occur (every node is in ≥1 edge by
-    construction); the symmetrized graph has no dangling nodes either,
-    so the (1−d)/N teleport term is exact without a dangling-mass
-    correction.
+    Scale bound: one component's adjacency must fit in one row of one
+    task — the same argument triangle_stats makes for its join fan-out.
+    Dup graphs are bounded by cluster size; a graph with a giant
+    component needs the global matvec instead. The replaced ten-round
+    join+groupBy loop ran 68 jobs on the staged pair graph against 10
+    here (plans/r14/pagerank_dup_docs_*.txt, A/B in CHANGES.md).
 
-    Returns (id, rank) with ranks summing to 1.
+    ``components`` is an optional (id, comp) frame that labels every
+    node of ``edges`` once (e.g. the staged dup components; ids absent
+    from ``edges`` are ignored); when absent it is computed with
+    connected_components. Returns (id, rank) with ranks summing to 1.
     """
-    sym = (
+    if int(n_iter) < 1:
+        raise ValueError(f"pagerank needs n_iter >= 1, got {n_iter=}")
+    if components is None:
+        components = connected_components(edges, src_col, dst_col)
+    # Neighbour sets of the symmetrized graph: one aggregation both
+    # dedups parallel edges and yields the out-degree.
+    adj = (
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .union(edges.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst")))
-        .distinct()
-        .localCheckpoint()
+        .groupBy("src")
+        .agg(F.collect_set("dst").alias("nbrs"))
     )
-    deg = sym.groupBy("src").agg(F.count("*").alias("out_deg"))
-    norm_edges = sym.join(deg, "src").select(
-        "src", "dst", (F.lit(1.0) / F.col("out_deg")).alias("w")
-    ).localCheckpoint()
-    nodes = deg.select(F.col("src").alias("id"))
-    n_nodes = nodes.agg(F.count("*").alias("n"))
-    ranks = nodes.join(F.broadcast(n_nodes)).select(
-        "id", (F.lit(1.0) / F.col("n")).alias("rank")
+    # i = the node's position in its component's id-ordered node array.
+    node = components.join(adj, F.col("id") == F.col("src")).select(
+        "id",
+        "comp",
+        "nbrs",
+        (F.row_number().over(Window.partitionBy("comp").orderBy("id")) - 1).alias("i"),
     )
-    for _ in range(int(n_iter)):
-        contrib = (
-            norm_edges.join(ranks, norm_edges["src"] == ranks["id"])
-            .groupBy("dst")
-            .agg(F.sum(F.col("rank") * F.col("w")).alias("in_mass"))
+    n_row = node.agg(F.count(F.lit(1)).alias("n"))
+    # Symmetric graph: a node's in-neighbours are its out-neighbours,
+    # each contributing rank * (1 / its own out-degree); every node has
+    # one, so grouping the in-edges by (comp, dst) lists every node.
+    per_comp = (
+        node.select(
+            "comp",
+            F.explode("nbrs").alias("id"),
+            "i",
+            (F.lit(1.0) / F.size("nbrs")).alias("w"),
         )
-        ranks = (
-            nodes.join(contrib, nodes["id"] == contrib["dst"], "left")
-            .join(F.broadcast(n_nodes))
-            .select(
-                "id",
-                (
-                    (1.0 - damping) / F.col("n")
-                    + damping * F.coalesce("in_mass", F.lit(0.0))
-                ).alias("rank"),
+        .groupBy("comp", "id")
+        .agg(F.array_sort(F.collect_list(F.struct("i", "w"))).alias("ins"))
+        .groupBy("comp")
+        .agg(F.array_sort(F.collect_list(F.struct("id", "ins"))).alias("_nodes"))
+        .join(F.broadcast(n_row))
+    )
+
+    def step(rank, _):
+        return F.transform(
+            "_nodes",
+            lambda nd: (1.0 - damping) / F.col("n")
+            + damping
+            * F.aggregate(
+                nd["ins"], F.lit(0.0), lambda acc, e: acc + rank[e["i"]] * e["w"]
+            ),
+        )
+
+    r0 = F.array_repeat(F.lit(1.0) / F.col("n"), F.size("_nodes"))
+    ranks = F.aggregate(F.sequence(F.lit(1), F.lit(int(n_iter))), r0, step)
+    return per_comp.select(
+        F.inline(
+            F.zip_with(
+                "_nodes", ranks, lambda nd, r: F.struct(nd["id"].alias("id"), r.alias("rank"))
             )
-            .localCheckpoint(eager=False)
         )
-    return ranks
+    )
 
 
 def triangle_stats(

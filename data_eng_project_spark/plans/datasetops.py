@@ -520,11 +520,14 @@ def incremental_join_view_update(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pagerank_oracle(n_iter: int = 10, damping: float = 0.85) -> str:
     """Recursive SQL rejects aggregation inside the recursive term, but
     a FIXED-iteration power method unrolls into ``n_iter`` chained CTEs
-    — one join+groupBy matvec each, exactly mirroring the DataFrame
-    loop in operators/clusters.pagerank. Rounding to 6 dp happens once
-    at the end on both engines; the ~1e-15-relative float-order noise
-    of ten compounded sums sits far below that (same accepted risk
-    class as every rounded-cosine oracle)."""
+    — one global join+groupBy matvec each. operators/clusters.pagerank
+    solves per component instead; that is exact because the symmetrized
+    graph has no dangling nodes, and each term is the same
+    rank * (1/out_degree) product with the same (1−d)/N teleport, so
+    only the summation order of a node's in-mass differs. Rounding to
+    6 dp happens once at the end on both engines; that ~1e-17 float-order
+    noise sits far below it (same accepted risk class as every
+    rounded-cosine oracle)."""
     teleport = f"{1.0 - damping!r}"
     steps = []
     for i in range(1, n_iter + 1):
@@ -569,15 +572,19 @@ def pagerank_dup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank centrality over the near-dup pair graph — popularity
     weighting for curation decisions (e.g. the most-connected member of
     a dup family is the template, its satellites are variants). Fixed
-    10-iteration power method, one join+groupBy per round, zero driver
-    round-trips. Iterates over the STAGED pair graph
-    (pipelines/staging.py) — 10 rounds re-scan a small parquet pair
-    list, never re-run the similarity join."""
+    10-iteration power method, solved per dup component in one job
+    (operators/clusters.pagerank). Reads the STAGED pair graph and
+    components (pipelines/staging.py), so neither the similarity join
+    nor the component fixpoint re-runs here."""
     prepare(spark)
-    from data_eng_project_spark.pipelines.staging import near_dup_pairs
+    from data_eng_project_spark.pipelines.staging import (
+        dup_components,
+        near_dup_pairs,
+    )
 
     pairs = near_dup_pairs(spark, sf_dir, n=3, threshold=JACCARD_THRESHOLD)
-    ranks = pagerank(pairs)
+    comps = dup_components(spark, sf_dir, n=3, threshold=JACCARD_THRESHOLD)
+    ranks = pagerank(pairs, components=comps)
     return ranks.select(
         F.col("id").alias("doc_id"), F.round("rank", 6).alias("rank")
     )

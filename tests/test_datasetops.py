@@ -209,16 +209,11 @@ def test_incremental_join_view_merge_equals_recompute(spark):
     assert got == want
 
 
-def test_pagerank_matches_numpy_power_iteration(spark):
+def _numpy_pagerank(edges, n_iter=10, damping=0.85):
+    """Global power iteration over the symmetrized graph: the
+    definition the per-component operator must reproduce."""
     import numpy as np
 
-    from data_eng_project_spark.operators.clusters import pagerank
-
-    edges = [(0, 1), (1, 2), (2, 0), (2, 3)]  # triangle + pendant
-    df = spark.createDataFrame(edges, "id_a long, id_b long")
-    got = {r["id"]: r["rank"] for r in pagerank(df, n_iter=10).collect()}
-
-    # numpy twin: identical symmetrized graph, damping, iterations
     sym = set()
     for a, b in edges:
         sym.add((a, b)); sym.add((b, a))
@@ -230,11 +225,77 @@ def test_pagerank_matches_numpy_power_iteration(spark):
     for a, b in sym:
         M[idx[b], idx[a]] = 1.0 / out_deg[a]
     r = np.full(n, 1.0 / n)
-    for _ in range(10):
-        r = (1 - 0.85) / n + 0.85 * (M @ r)
-    for node in nodes:
-        assert got[node] == pytest.approx(r[idx[node]], abs=1e-9)
+    for _ in range(n_iter):
+        r = (1 - damping) / n + damping * (M @ r)
+    return {node: r[idx[node]] for node in nodes}
+
+
+def test_pagerank_matches_numpy_power_iteration(spark):
+    from data_eng_project_spark.operators.clusters import pagerank
+
+    edges = [(0, 1), (1, 2), (2, 0), (2, 3)]  # triangle + pendant
+    df = spark.createDataFrame(edges, "id_a long, id_b long")
+    got = {r["id"]: r["rank"] for r in pagerank(df, n_iter=10).collect()}
+
+    # numpy twin: identical symmetrized graph, damping, iterations
+    want = _numpy_pagerank(edges)
+    for node, rank in want.items():
+        assert got[node] == pytest.approx(rank, abs=1e-9)
     assert sum(got.values()) == pytest.approx(1.0, abs=1e-6)
+
+
+# A lone edge, a triangle plus pendant, and a 5-node chain: the teleport
+# term divides by the GLOBAL node count (11), which a one-component
+# graph cannot tell apart from the component's own size.
+_MULTI_COMPONENT_EDGES = [
+    (100, 101),
+    (0, 1), (1, 2), (2, 0), (2, 3),
+    (10, 11), (11, 12), (12, 13), (13, 14),
+]
+_MULTI_COMPONENT_LABELS = {
+    100: 100, 101: 100,
+    0: 0, 1: 0, 2: 0, 3: 0,
+    10: 10, 11: 10, 12: 10, 13: 10, 14: 10,
+}
+
+
+def test_pagerank_per_component_matches_global_numpy(spark):
+    from data_eng_project_spark.operators.clusters import pagerank
+
+    df = spark.createDataFrame(_MULTI_COMPONENT_EDGES, "id_a long, id_b long")
+    comps = spark.createDataFrame(
+        sorted(_MULTI_COMPONENT_LABELS.items()), "id long, comp long"
+    )
+    want = _numpy_pagerank(_MULTI_COMPONENT_EDGES)
+    for ranks in (pagerank(df), pagerank(df, components=comps)):
+        got = {r["id"]: r["rank"] for r in ranks.collect()}
+        assert got.keys() == want.keys()
+        for node, rank in want.items():
+            assert got[node] == pytest.approx(rank, abs=1e-12)
+        assert sum(got.values()) == pytest.approx(1.0, abs=1e-12)
+
+
+def test_pagerank_with_components_builds_without_jobs_or_caches(spark):
+    """Given its components, PageRank's plan is pure: building it runs
+    no Spark job, and neither building nor collecting it leaves a
+    persisted RDD (no checkpoint per round, no cached edge list)."""
+    from data_eng_project_spark.operators.clusters import pagerank
+
+    sc = spark.sparkContext
+    df = spark.createDataFrame(_MULTI_COMPONENT_EDGES, "id_a long, id_b long")
+    comps = spark.createDataFrame(
+        sorted(_MULTI_COMPONENT_LABELS.items()), "id long, comp long"
+    )
+    persisted = sc._jsc.getPersistentRDDs().size()
+    group = "pagerank-job-shape"
+    sc.setJobGroup(group, group)
+    try:
+        ranks = pagerank(df, components=comps)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert len(ranks.collect()) == len(_MULTI_COMPONENT_LABELS)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc._jsc.getPersistentRDDs().size() <= persisted
 
 
 def test_containment_catches_what_jaccard_misses(spark):

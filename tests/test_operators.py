@@ -381,6 +381,35 @@ def test_connected_components_chain_and_islands(spark):
     }
 
 
+def test_connected_components_stop_one_round_after_fixpoint(spark, monkeypatch):
+    """Disjoint cliques are fully labeled by the fused initialization
+    round, so two propagation rounds with equal label sums certify the
+    fixpoint; the convergence check runs every round, so no third round
+    (one lazy checkpoint each) is built."""
+    from itertools import combinations
+
+    from data_eng_project_spark.operators.clusters import connected_components
+
+    cliques = [(1, 2, 3), (5, 6, 7, 8), (20, 21)]
+    edges = spark.createDataFrame(
+        [pair for c in cliques for pair in combinations(c, 2)],
+        "id_a long, id_b long",
+    )
+    lazy_cuts = []
+    frame_cls = type(edges)
+    checkpoint = frame_cls.localCheckpoint
+
+    def counting(self, eager=True, *args, **kwargs):
+        if not eager:
+            lazy_cuts.append(1)
+        return checkpoint(self, eager, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", counting)
+    got = {(r.id, r.comp) for r in connected_components(edges).collect()}
+    assert got == {(n, min(c)) for c in cliques for n in c}
+    assert len(lazy_cuts) == 2
+
+
 def test_connected_components_long_path_converges_fast(spark):
     """A 200-node path needs ~199 rounds of plain neighbor-min
     propagation; with per-round pointer jumping it must converge well

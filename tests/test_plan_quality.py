@@ -915,3 +915,20 @@ def test_bm25_corpus_tokenized_once(spark):
         "corpus-stats branch rebuilt the per-doc TF exchange — "
         "the corpus is being tokenized twice"
     )
+
+
+@pytest.mark.parametrize("name", ["hybrid_search", "rrf_hybrid_search"])
+def test_search_fusion_reuses_per_doc_tf_exchange(spark, name):
+    """hybrid/rrf fan the BM25 frame out to several consumers with no
+    materialization; recompute is cheap only because AQE reuses the
+    per-doc TF shuffle (keyed on doc_id) across them at runtime. Pin
+    that on the EXECUTED plan, as test_bm25_corpus_tokenized_once does
+    for bm25_search."""
+    df = REGISTRY[name].fn(spark, SF)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    reused = [
+        line for line in plan.splitlines()
+        if "ReusedExchange" in line and "Exchange hashpartitioning(doc_id" in line
+    ]
+    assert reused, f"{name}: per-doc TF exchange rebuilt for a second consumer"
