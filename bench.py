@@ -1,12 +1,16 @@
 #!/usr/bin/env python3
 """Benchmark harness: times the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+JSON line:
 
-Each query is materialized through the noop sink (full computation of
-every output column, no write cost, no driver collect) — the honest
-"execute the plan" measurement.
+    metric, value (sum of the 21 headline minima, sec), unit, queries,
+    sf, cpus_effective, master, shuffle_partitions, headline_set_version,
+    extended_queries, extended_total, staged, steal_pct
+
+Each query is materialized through the noop sink: every output column is
+computed, with no write cost and no driver collect. Host noise is
+recorded, not gated: ``steal_pct`` is the host CPU-steal share over the
+timed sweeps (BASELINE.md, round 11 root cause), ``null`` off Linux.
 """
 
 from __future__ import annotations
@@ -19,78 +23,44 @@ import time
 from data_eng_project_spark.plans import REGISTRY
 from data_eng_project_spark.session import get_session
 
-# Quiet anchors ≈ 2× the measured quiet-host values (gemm 0.0434,
-# pyloop 0.789 — BASELINE.md); steal per the r11 root-cause measurement.
-QUIET_GEMM, QUIET_PYLOOP, QUIET_STEAL_PCT = 0.09, 0.95, 2.0
+# Timed next to the headline set but totaled apart, so `value` stays the
+# same 21-query series it has been since round 1 (headline set v2).
+EXTENDED = (
+    "dedup_ngram_jaccard_collapsed",
+    "winsorize_length_bounds",
+    "quantized_topk_agreement",
+)
 
 
-def derive_quiet_flags(
-    calib_series: list[dict],
-    host_calibration: dict,
-    min_sweep: dict[str, int],
-) -> tuple[bool, bool, dict[int, bool]]:
-    """Quiet gating, r12 semantics (pure function — pinned by
-    tests/test_bench_gate.py). min-of-3 per query means the artifact's
-    REPORTED numbers each come from exactly one sweep; what certifies a
-    number is that ITS sweep was clean (bracketing steal ≤ 2%, both
-    boundary calibration probes at the quiet anchors), not that every
-    minute of the run was. On this host steal arrives in minute-scale
-    bursts (BASELINE.md r11 root-cause), so the r11 all-intervals gate
-    demanded a 4-minute steal-free window that direct measurement shows
-    rarely exists — while a run whose three sweeps each contain SOME
-    clean queries can still pin every reported min inside clean
-    brackets. Steal only ever inflates a measurement (conservative
-    direction), so a min taken from a clean sweep is an honest
-    steady-state reading regardless of what other sweeps saw.
+def time_queries(spark, sf_dir: str, specs, sweeps: int) -> dict[str, float]:
+    """Run every spec ``sweeps`` times through the noop sink and return
+    {name: min seconds}. Each sweep visits all specs in order, so a
+    query's samples sit a full sweep apart and a transient slow window
+    inflates at most one of them; the min discards interference, never
+    work. The cache is cleared after each query so none feeds the next."""
+    best: dict[str, float] = {}
+    for _ in range(sweeps):
+        for spec in specs:
+            t0 = time.perf_counter()
+            spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            elapsed = round(time.perf_counter() - t0, 3)
+            best[spec.name] = min(elapsed, best.get(spec.name, elapsed))
+            spark.catalog.clearCache()
+    return best
 
-    Returns (quiet_regime, fully_quiet_run, sweep_clean):
-    - quiet_regime: every reported min came from a clean sweep AND the
-      tail interval (staged group + final min-of-3 anchor) was clean.
-    - fully_quiet_run: the stricter r11 semantics — every snapshot at
-      the anchors and every measured interval steal-clean.
-    - sweep_clean: per-sweep cleanliness, recorded in the artifact.
-    Missing /proc/stat (non-Linux) leaves steal None → that term
-    passes and the gate falls back to calibration-only.
-    """
-    snap = {s["at"]: s for s in calib_series}
 
-    def _snap_quiet(at: str) -> bool:
-        s = snap.get(at)
-        return (
-            s is not None
-            and s["gemm_sec"] <= QUIET_GEMM
-            and s["pyloop_sec"] <= QUIET_PYLOOP
-        )
+def _cpu_jiffies() -> tuple[int, int] | None:
+    """(total, steal) jiffies of the aggregate cpu line, None off Linux."""
+    try:
+        with open("/proc/stat") as f:
+            vals = [int(x) for x in f.readline().split()[1:9]]
+        return sum(vals), vals[7]
+    except (OSError, ValueError, IndexError):
+        return None
 
-    def _interval_clean(at: str) -> bool:
-        s = snap.get(at)
-        if s is None:
-            return False
-        st = s["steal_pct_since_prev"]
-        return st is None or st <= QUIET_STEAL_PCT
 
-    _sweep_bounds = {1: "post_warmup", 2: "after_sweep_1", 3: "after_sweep_2"}
-    sweep_clean = {
-        i: (
-            _interval_clean(f"after_sweep_{i}")
-            and _snap_quiet(_sweep_bounds[i])
-            and _snap_quiet(f"after_sweep_{i}")
-        )
-        for i in (1, 2, 3)
-    }
-    tail_clean = (
-        _interval_clean("post_calibration")
-        and host_calibration["gemm_sec"] <= QUIET_GEMM
-        and host_calibration["pyloop_sec"] <= QUIET_PYLOOP
-    )
-    quiet_regime = (
-        all(sweep_clean[s] for s in min_sweep.values()) and tail_clean
-    )
-    fully_quiet_run = all(_snap_quiet(s["at"]) for s in calib_series) and all(
-        _interval_clean(at)
-        for at in ("after_sweep_1", "after_sweep_2", "after_sweep_3", "post_calibration")
-    )
-    return quiet_regime, fully_quiet_run, sweep_clean
+def _ident(batches):
+    yield from batches
 
 
 def main() -> None:
@@ -101,302 +71,65 @@ def main() -> None:
     except ValueError:
         sf_val = sf
 
-    # Quiesce: round-2's recorded +7.6% "regression" was concurrent host
-    # load during the snapshot (re-run solo in round 3, the same code
-    # measured FASTER than round 1: 15.2 s vs 16.35 s). min-of-3 defends
-    # against transient interference windows, not sustained load. The
-    # box's documented quiet threshold is a 1-min load < 1.5 (BASELINE.md;
-    # the old < 4 gate let the r6/r7 artifacts inherit 1.3-1.5x uniform
-    # ambient slow-band inflation), so wait up to 10 min for quiet before
-    # starting. NB: this wait only delays the start — the artifact's
-    # quiet_regime flag is derived at the END from the in-run calibration
-    # series (the slow band shows ZERO load, so load-average cannot gate
-    # the label; r10 lesson).
-    QUIET_LOAD = 1.5
-    load_at_start = os.getloadavg()[0]
-    deadline = time.time() + 600
-    while load_at_start > QUIET_LOAD and time.time() < deadline:
-        time.sleep(10)
-        load_at_start = os.getloadavg()[0]
-
     spark = get_session("bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     headline = [spec for spec in REGISTRY.values() if spec.headline]
-    # Headline set v2 (round 8): the bench also exercises operators the
-    # later rounds added, APPENDED as a separately-totaled group so
-    # `value` stays the same 21-query series every round since r1
-    # (cross-round comparability) while BENCH_rN.json still covers the
-    # growing surface. v2 additions: the exact-collapse near-dedup
-    # (the production defense against quadratic duplicate classes) and
-    # the bucket-pruned winsorization profile. Round 9 appends the int8
-    # retrieval-agreement audit (fixed 100-probe panel, broadcast
-    # probe×corpus pass) to the same group.
-    HEADLINE_V2_EXTRA = [
-        "dedup_ngram_jaccard_collapsed",
-        "winsorize_length_bounds",
-        "quantized_topk_agreement",
-    ]
-    extra = [REGISTRY[n] for n in HEADLINE_V2_EXTRA]
-    # Warm-up passes (steady-state measurement, standard bench practice —
-    # the timed runs below still execute every query's full plan):
-    # 1. Prime the entire Python/Arrow worker pool: the first pandas-UDF
-    #    stage of a session forks one worker per core, ~5-10 s of one-time
-    #    process startup that would otherwise be billed to whichever
-    #    query happens to run first.
+    extended = [REGISTRY[n] for n in EXTENDED]
+    specs = [*headline, *extended]
 
-    def _ident(it):
-        for pdf in it:
-            yield pdf
-
+    # Fork the whole Python/Arrow worker pool once: the first pandas-UDF
+    # stage of a session pays seconds of one-time process startup that
+    # would otherwise land on whichever query runs first.
     (
-        spark.range(0, 10_000, 1, int(spark.sparkContext.defaultParallelism))
+        spark.range(0, 10_000, 1, spark.sparkContext.defaultParallelism)
         .mapInPandas(_ident, schema="id long")
         .write.format("noop").mode("overwrite").save()
     )
-    # 2. Steady-state timing: each query runs once untimed (JIT +
-    #    whole-stage-codegen compilation of ITS plan, page-cache priming)
-    #    and then once timed — the second run executes the identical full
-    #    plan through the noop sink; nothing is cached between the two
-    #    (clearCache in between, and these plans contain no .cache()).
-    #    Single-shot cold numbers on this box vary ±4x for the same query
-    #    (JIT/GC noise dominates sub-second plans); repeat-run timing is
-    #    the reproducible measurement.
-    #    Additionally, this box shows *minute-scale* host-wide slow windows
-    #    (every query uniformly 2-4x slower, CPU otherwise idle), so a
-    #    single timed sweep can land entirely inside one. Three timed
-    #    sweeps spread each query's samples minutes apart; per-query MIN
-    #    is the reproducible steady-state number (each sample still
-    #    executes the full plan through the noop sink — min discards
-    #    interference, never work).
-    # Regime TRACE (round 10): one cheap Spark-free probe snapshot before
-    # the warm-up and after every timed sweep. The r9 artifact carried a
-    # single end-of-run calibration, which cannot prove the REST of the
-    # run's regime (this box's slow bands shift on ~minute timescales —
-    # a quiet pre-check launch was observed to end with gemm at 20× its
-    # quiet anchor). A 4-point series brackets every sweep: the run is
-    # provably quiet iff every snapshot sits near the quiet anchor in
-    # BASELINE.md (gemm 0.044 / pyloop 0.79). Single-rep probes (~1 s)
-    # — the series detects regime, the final min-of-3 below anchors it.
-    # CPU-steal trace (round 11 — the band's measured ROOT CAUSE): the
-    # host is a VM whose hypervisor steals CPU under wide parallelism
-    # (14% of a 32-process burn measured directly; ~15% of historical
-    # busy jiffies per /proc/stat), while single-thread probes see
-    # little steal because the host has headroom for one core. That is
-    # exactly why idle-time canaries read quiet minutes before a
-    # 32-thread Spark run lands 1.5× slow (BASELINE.md r11 note), and
-    # why loadavg never saw anything. Sample /proc/stat at every
-    # calibration snapshot and gate quiet_regime on the measured steal
-    # share of each interval — the only signal here that observes the
-    # contention at the width Spark actually runs.
-    def _cpu_jiffies() -> tuple[int, int] | None:
-        try:
-            f = open("/proc/stat").readline().split()
-            vals = [int(x) for x in f[1:9]]
-            return sum(vals), vals[7]  # (total jiffies, steal jiffies)
-        except (OSError, ValueError, IndexError):
-            return None  # non-Linux: steal trace unavailable
+    # One untimed sweep compiles each plan (JIT, whole-stage codegen) and
+    # primes the page cache; cold single shots vary up to 4x (BASELINE.md).
+    time_queries(spark, sf_dir, specs, 1)
 
-    _steal_prev = _cpu_jiffies()
+    j0 = _cpu_jiffies()
+    mins = time_queries(spark, sf_dir, specs, 3)
+    j1 = _cpu_jiffies()
+    steal_pct = None
+    if j0 and j1 and j1[0] > j0[0]:
+        steal_pct = round(100.0 * (j1[1] - j0[1]) / (j1[0] - j0[0]), 2)
+    times = {s.name: mins[s.name] for s in headline}
+    extra_times = {s.name: mins[s.name] for s in extended}
 
-    def _steal_pct_since_prev() -> float | None:
-        nonlocal _steal_prev
-        cur = _cpu_jiffies()
-        if cur is None or _steal_prev is None:
-            _steal_prev = cur
-            return None
-        dt, ds = cur[0] - _steal_prev[0], cur[1] - _steal_prev[1]
-        _steal_prev = cur
-        return round(100.0 * ds / dt, 2) if dt > 0 else None
-
-    import numpy as _np
-
-    _rng = _np.random.default_rng(0)
-    _a = _rng.standard_normal((1024, 1024))
-    _b = _rng.standard_normal((1024, 1024))
-
-    def _calib(fn, n=3):
-        best = float("inf")
-        for _ in range(n):
-            t0 = time.perf_counter()
-            fn()
-            best = min(best, time.perf_counter() - t0)
-        return round(best, 4)
-
-    # IDENTICAL kernel to tools/host_calibration.py (a @ b with a fixed
-    # second matrix, ×4) so the two artifacts' gemm_sec anchors are the
-    # same workload and BASELINE.md can compare them like for like.
-    def _gemm():
-        c = _a
-        for _ in range(4):
-            c = c @ _b
-        float(c[0, 0])
-
-    def _pyloop():
-        acc = 0
-        for i in range(20_000_000):
-            acc += i & 1023
-
-    # One untimed gemm before the 'pre' snapshot: the process's
-    # first-ever BLAS call pays thread-pool init + page faults, which
-    # biased the r10 'pre' reading slow relative to the min-of-3 quiet
-    # anchor it is compared against (could false-flag a quiet run).
-    _gemm()
-    calib_series = [
-        {
-            "at": "pre",
-            "gemm_sec": _calib(_gemm, 1),
-            "pyloop_sec": _calib(_pyloop, 1),
-            "steal_pct_since_prev": _steal_pct_since_prev(),
-        }
-    ]
-
-    for spec in [*headline, *extra]:  # untimed warm-up sweep (JIT/codegen/page cache)
-        try:
-            spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        except Exception:
-            pass
-        spark.catalog.clearCache()
-    # Reset the steal baseline AFTER the warm-up loop (r12, ADVICE): without
-    # this snapshot the pre→after_sweep_1 jiffies window spans the untimed
-    # warm-up too, so steal that hit only the warm-up would false-flag a run
-    # whose timed sweeps were clean. post_warmup's own steal reading covers
-    # the warm-up interval (recorded, but excluded from the quiet gate).
-    calib_series.append(
-        {
-            "at": "post_warmup",
-            "gemm_sec": _calib(_gemm, 1),
-            "pyloop_sec": _calib(_pyloop, 1),
-            "steal_pct_since_prev": _steal_pct_since_prev(),
-        }
-    )
-    times: dict[str, float] = {}
-    extra_times: dict[str, float] = {}
-    # Which sweep produced each query's reported min — the basis of the
-    # per-min quiet gate below (r12): min-of-3 already discards
-    # interference, so the honest question is not "was the whole run
-    # clean" but "was the sweep each REPORTED number came from clean".
-    min_sweep: dict[str, int] = {}
-    for _sweep in range(3):
-        for spec, sink in [*((s, times) for s in headline), *((s, extra_times) for s in extra)]:
-            t0 = time.perf_counter()
-            df = spec.fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            elapsed = round(time.perf_counter() - t0, 3)
-            prev = sink.get(spec.name)
-            if prev is None or elapsed < prev:
-                sink[spec.name] = elapsed
-                min_sweep[spec.name] = _sweep + 1
-            # Drop any operator-internal persists so queries don't interfere.
-            spark.catalog.clearCache()
-        calib_series.append(
-            {
-                "at": f"after_sweep_{_sweep + 1}",
-                "gemm_sec": _calib(_gemm, 1),
-                "pyloop_sec": _calib(_pyloop, 1),
-                # steal share of THIS sweep's interval — the jiffies
-                # window since the previous snapshot brackets exactly
-                # the queries timed in between.
-                "steal_pct_since_prev": _steal_pct_since_prev(),
-            }
-        )
-
-    total = round(sum(times.values()), 3)
-    extra_total = round(sum(extra_times.values()), 3)
-
-    # Staged-pipeline group (VERDICT r4 task 5): the shared near-dup
-    # pair-graph stage is the engine's decisive 100 TB move — one
-    # corpus-scale similarity join feeding five consumers. Capture both
-    # halves in the benchmark record so a regression in either the
-    # build or the consumers' scan-not-recompute property shows up in
-    # BENCH_rN.json, not just prose. Reported OUTSIDE `value` so the
-    # headline total stays comparable across rounds.
+    # Staged pair-graph group: cold build plus the five consumers reading
+    # the stage, reported outside `value`.
     from data_eng_project_spark.pipelines import staging
 
     staged_times = staging.timed_staged_run(spark, sf_dir)
 
-    # Spark-free host-speed probes (round 9): this box shows sustained
-    # zero-load slow bands where every query inflates uniformly, so the
-    # artifact carries its own calibration — compare gemm/pyloop across
-    # rounds to attribute a bench delta to code vs host (anchor values
-    # in BASELINE.md; tools/host_calibration.py is the standalone
-    # version). Final reading is min-of-3 (the cross-round anchor); the
-    # per-sweep single-rep series above is the regime trace.
-    host_calibration = {"gemm_sec": _calib(_gemm), "pyloop_sec": _calib(_pyloop)}
-    # Final steal sample (r12, ADVICE): the min-of-3 host_calibration above
-    # is thresholded by the quiet gate but was previously outside the steal
-    # trace. This interval brackets the staged-pipeline run plus the final
-    # calibration, closing the trace over every measurement the artifact
-    # reports.
-    calib_series.append(
-        {
-            "at": "post_calibration",
-            "gemm_sec": host_calibration["gemm_sec"],
-            "pyloop_sec": host_calibration["pyloop_sec"],
-            "steal_pct_since_prev": _steal_pct_since_prev(),
-        }
-    )
-
-    # quiet_regime is derived from the in-run measurements, not
-    # load-average (r10 lesson: the slow band shows zero load, so the
-    # old load-gate let two consecutive in-band artifacts self-label
-    # quiet while their own series read gemm at up to 75× the anchor).
-    # Two conditions, both required:
-    # 1. Calibration thresholds ≈ 2× the quiet anchors in BASELINE.md
-    #    (gemm 0.0434, pyloop 0.789) at every snapshot.
-    # 2. Hypervisor steal ≤ 2% in every inter-snapshot interval — the
-    #    r11 root-cause measurement: the band IS demand-sensitive CPU
-    #    steal (14% of a 32-way burn), which single-thread calibration
-    #    kernels under-observe because the host keeps headroom for one
-    #    core. A run whose own sweeps executed under steal is banded
-    #    regardless of how quiet the probes read. Missing /proc/stat
-    #    (non-Linux) leaves the steal terms None and falls back to the
-    #    calibration-only gate.
-    # Quiet gating, r12 semantics — see derive_quiet_flags (module level,
-    # pure, unit-pinned): quiet_regime certifies every REPORTED min came
-    # from a clean sweep + a clean tail; fully_quiet_run preserves the
-    # stricter r11 all-intervals semantics for cross-round comparison.
-    quiet_regime, fully_quiet_run, sweep_clean = derive_quiet_flags(
-        calib_series, host_calibration, min_sweep
-    )
-
-    # Effective-parallelism fields (r13, VERDICT r12 "next round" #1):
-    # PERF_r12 flagged `suspect_cpus_ignored` because nothing in this
-    # JSON showed what width the run actually executed at — the harness
-    # honored $SPARK_GRAFT_CPUS (session.get_session builds
-    # master=local[n] and sizes shuffle partitions from it) but the
-    # driver's scaling probe could not see that. Record the *session's
-    # own* values, read back from the live context, not the env var.
+    # The width the session really ran at, read back from the live context.
     try:
         shuffle_parts: int | str = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:  # noqa: BLE001 — non-numeric conf: record raw
-        shuffle_parts = spark.conf.get("spark.sql.shuffle.partitions", "?")
+    except ValueError:
+        shuffle_parts = spark.conf.get("spark.sql.shuffle.partitions")
 
     print(
         json.dumps(
             {
                 "metric": "headline_queries_total_runtime",
-                "value": total,
+                "value": round(sum(times.values()), 3),
                 "unit": "sec",
                 "queries": times,
                 "sf": sf_val,
                 "cpus_effective": spark.sparkContext.defaultParallelism,
                 "master": spark.sparkContext.master,
                 "shuffle_partitions": shuffle_parts,
-                "load_1min_at_start": round(load_at_start, 2),
-                "quiet_regime": quiet_regime,
-                "fully_quiet_run": fully_quiet_run,
-                "min_sweep": min_sweep,
-                "sweep_clean": {str(k): v for k, v in sweep_clean.items()},
                 "headline_set_version": 2,
                 "extended_queries": extra_times,
-                "extended_total": extra_total,
+                "extended_total": round(sum(extra_times.values()), 3),
                 "staged": {
                     **staged_times,
                     "consumers": len(staging.STAGED_CONSUMERS),
                 },
-                "host_calibration": host_calibration,
-                "host_calibration_series": calib_series,
+                "steal_pct": steal_pct,
             }
         )
     )

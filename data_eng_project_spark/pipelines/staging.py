@@ -37,7 +37,9 @@ import hashlib
 import inspect
 import os
 import shutil
+import sys
 import tempfile
+import types
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -51,6 +53,43 @@ from pyspark.sql import DataFrame, SparkSession
 _STAGE_VERSION = 2
 
 
+_PKG = __name__.split(".")[0]
+
+
+def _op_source_files(*ops) -> list[str]:
+    """Source files behind the staged operators: each op's defining
+    file plus the file of every in-package module reachable from that
+    module's module-level globals, transitively. A global counts when
+    it is an in-package module or an object whose ``__module__`` is one
+    (``from ..functions.text import tokens`` reaches functions/text.py).
+    Imports made inside a function body are not followed; a staged
+    producer's callees must be imported at module level."""
+    files: set[str] = set()
+    seen: set[int] = set()
+    todo = [op.__globals__ for op in ops if hasattr(op, "__globals__")]
+    for op in ops:
+        src_file = inspect.getsourcefile(op)
+        if src_file:
+            files.add(os.path.abspath(src_file))
+    while todo:
+        namespace = todo.pop()
+        if id(namespace) in seen:
+            continue
+        seen.add(id(namespace))
+        for value in list(namespace.values()):
+            mod = (
+                value
+                if isinstance(value, types.ModuleType)
+                else sys.modules.get(getattr(value, "__module__", None) or "")
+            )
+            name = getattr(mod, "__name__", "")
+            path = getattr(mod, "__file__", None)
+            if (name == _PKG or name.startswith(_PKG + ".")) and path:
+                files.add(os.path.abspath(path))
+                todo.append(vars(mod))
+    return sorted(files)
+
+
 def _op_fingerprint(*ops) -> str:
     """Digest of the staged operators' source code: any edit to the code
     that produces a staged artifact yields a new stage key, so a semantic
@@ -59,23 +98,19 @@ def _op_fingerprint(*ops) -> str:
     also rotate the key — a few seconds of rebuild, bought for the
     guarantee.
 
-    The digest covers the operator's own source AND its defining source
-    FILE in full: the motivating round-4 bug class (a fix inside a
-    same-module callee such as ``_verified_jaccard`` changing
-    ``ngram_jaccard_pairs`` output while the named function's bytes stay
-    identical) must rotate the key too. Cross-module callees are the
-    remaining blind spot; staged producers keep their helper chain in
-    their own module by convention."""
+    The digest covers each operator's own source and, in full, every
+    file _op_source_files finds behind it: a fix inside a same-module
+    callee (round 4: ``_verified_jaccard`` under ``ngram_jaccard_pairs``)
+    or in a callee from another module of the package (``tokens`` in
+    functions/text.py) rotates the key while the named function's bytes
+    stay identical."""
     h = hashlib.md5()
-    hashed_files = set()
     for op in ops:
         h.update(getattr(op, "__qualname__", repr(op)).encode())
         h.update(inspect.getsource(op).encode())
-        src_file = inspect.getsourcefile(op)
-        if src_file and src_file not in hashed_files:
-            hashed_files.add(src_file)
-            with open(src_file, "rb") as f:
-                h.update(f.read())
+    for path in _op_source_files(*ops):
+        with open(path, "rb") as f:
+            h.update(f.read())
     return h.hexdigest()[:12]
 
 

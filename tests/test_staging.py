@@ -6,6 +6,7 @@ of re-running the similarity join."""
 from __future__ import annotations
 
 import os
+import sys
 
 import pytest
 
@@ -170,3 +171,54 @@ def test_timed_staged_run_reports_per_consumer_seconds(spark, sf_dir, stage_dir)
     # The group interval covers the per-consumer intervals (plus the
     # clearCache calls between them), never the other way around.
     assert out["warm_consumers_sec"] >= sum(out["consumer_sec"].values()) - 0.01
+
+
+def test_stage_key_covers_cross_module_callees(sf_dir, monkeypatch):
+    """ngram_jaccard_pairs tokenizes with functions/text.py, so that file
+    must sit behind the pair graph's key: an edit there would otherwise
+    leave a stale stage valid under a persistent $SPARK_GRAFT_STAGE_DIR."""
+    import data_eng_project_spark
+
+    seen = {}
+    real = staging.stage_path
+
+    def spy(kind, source_dir, _ops=(), **params):
+        seen["ops"] = _ops
+        return real(kind, source_dir, _ops, **params)
+
+    monkeypatch.setattr(staging, "stage_path", spy)
+    staging.near_dup_pairs_path(sf_dir)
+    pkg = os.path.dirname(data_eng_project_spark.__file__)
+    files = {os.path.relpath(f, pkg) for f in staging._op_source_files(*seen["ops"])}
+    assert {os.path.join("operators", "dedup.py"), os.path.join("functions", "text.py")} <= files
+
+
+def test_stage_key_rotates_on_cross_module_callee_edit(sf_dir, tmp_path, monkeypatch):
+    """Editing an in-package module two imports away (op -> mid -> leaf)
+    rotates the key, while the op's own file stays identical."""
+    import importlib.util
+
+    def _load(name, src):
+        path = tmp_path / f"{name.rsplit('.', 1)[-1]}.py"
+        path.write_text(src)
+        spec = importlib.util.spec_from_file_location(name, path)
+        mod = importlib.util.module_from_spec(spec)
+        monkeypatch.setitem(sys.modules, name, mod)
+        spec.loader.exec_module(mod)
+        return mod
+
+    _load("data_eng_project_spark._stage_key_leaf", "def leaf(x):\n    return x\n")
+    _load(
+        "data_eng_project_spark._stage_key_mid",
+        "from data_eng_project_spark._stage_key_leaf import leaf\n\n\n"
+        "def helper(x):\n    return leaf(x)\n",
+    )
+    op = _load(
+        "stage_key_caller",
+        "from data_eng_project_spark._stage_key_mid import helper\n\n\n"
+        "def op(df):\n    return helper(df)\n",
+    ).op
+
+    before = staging.stage_path("k", sf_dir, _ops=(op,), n=3)
+    (tmp_path / "_stage_key_leaf.py").write_text("def leaf(x):\n    return x.distinct()\n")
+    assert staging.stage_path("k", sf_dir, _ops=(op,), n=3) != before

@@ -7,7 +7,7 @@ Writes plans/r<N>/<query>_<label>.txt. Usage:
     python tools/capture_plans.py --round 14 --executed after pagerank_dup_docs
 
 With explicit query names those are captured (any registry query); with
-none, the bench set is dumped (every headline query plus EXTRA). By
+none, the bench set is dumped (every headline query plus bench.EXTENDED). By
 default the file holds ``explain("formatted")`` of the built plan;
 ``--executed`` instead runs the query and writes the final adaptive
 plan, followed by the number of Spark jobs that building and running
@@ -24,17 +24,13 @@ import sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
+from bench import EXTENDED  # noqa: E402
 from data_eng_project_spark.plans import REGISTRY  # noqa: E402
 from data_eng_project_spark.session import get_session  # noqa: E402
 
 SF_DIR = os.environ.get(
     "SPARK_GRAFT_SF_DIR", os.path.join(ROOT, "perfbench", "testdata", "sf0.1")
 )
-EXTRA = [
-    "dedup_ngram_jaccard_collapsed",
-    "winsorize_length_bounds",
-    "quantized_topk_agreement",
-]
 
 
 def _job_count(sc, group: str) -> int:
@@ -77,7 +73,7 @@ def main() -> None:
     if missing:
         raise SystemExit(f"not in REGISTRY: {missing}")
     if not names:
-        names = [n for n, s in REGISTRY.items() if s.headline] + EXTRA
+        names = [n for n, s in REGISTRY.items() if s.headline] + list(EXTENDED)
     out_dir = os.path.join(ROOT, "plans", f"r{args.round}")
     os.makedirs(out_dir, exist_ok=True)
     spark = get_session(f"capture-plans-r{args.round}")

@@ -75,8 +75,8 @@ def main() -> None:
         "`AUDIT_r*.txt`/`BENCH_r*.json` artifacts; those files remain the",
         "driver-contract source of truth).",
         "",
-        "| Round | Window graded (✓/✗) | Headline bench (s, sf0.1) | Quiet regime | Strict sf0.01 audit |",
-        "| --- | --- | --- | --- | --- |",
+        "| Round | Window graded (✓/✗) | Headline bench (s, sf0.1) | Strict sf0.01 audit |",
+        "| --- | --- | --- | --- |",
     ]
     per_round: dict[int, list[bool]] = {}
     for hist in rounds.values():
@@ -85,18 +85,12 @@ def main() -> None:
     for r in sorted(per_round):
         oks = per_round[r]
         bench = audit = "—"
-        quiet = ""
         bp = os.path.join(REPO, f"BENCH_r{r:02d}.json")
         if os.path.exists(bp):
             with open(bp) as f:
                 parsed = json.load(f).get("parsed") or {}
             if parsed.get("value") is not None:
                 bench = f"{parsed['value']}"
-            q = parsed.get("quiet_regime")
-            load = parsed.get("load_1min_at_start")
-            quiet = ("yes" if q else "unflagged") if q is not None else (
-                f"load {load}" if load is not None else "unflagged"
-            )
         ap = os.path.join(REPO, f"AUDIT_r{r:02d}.txt")
         if os.path.exists(ap):
             with open(ap) as f:
@@ -105,7 +99,7 @@ def main() -> None:
                 audit = last[-1].strip()
         lines.append(
             f"| r{r} | {sum(oks)}✓ / {len(oks) - sum(oks)}✗ "
-            f"| {bench} | {quiet} | {audit} |"
+            f"| {bench} | {audit} |"
         )
     lines += [
         "",

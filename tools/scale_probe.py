@@ -25,12 +25,12 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import EXTENDED, time_queries  # noqa: E402
 from data_eng_project_spark.plans import REGISTRY  # noqa: E402
 from data_eng_project_spark.session import get_session  # noqa: E402
 from data_eng_project_spark.tables import TABLE_NAMES, table_path  # noqa: E402
@@ -113,38 +113,21 @@ def main() -> None:
     if not _build_is_complete(out_dir, n):
         build(spark, src_dir, out_dir, n)
 
-    # Headline set v2 (bench.py): the default sweep also times the
-    # extended group, SEPARATELY totaled so `total` stays the same
-    # r1-comparable headline series across rounds while the closing
-    # 10× sweep covers the full benched surface (VERDICT r8 task 5).
-    HEADLINE_V2_EXTRA = [
-        "dedup_ngram_jaccard_collapsed",
-        "winsorize_length_bounds",
-        "quantized_topk_agreement",
-    ]
     if only:
-        specs = [(REGISTRY[q], False) for q in only if q != "staged"]
+        specs = [REGISTRY[q] for q in only if q != "staged"]
+        extended = []
     else:
-        specs = [(s, False) for s in REGISTRY.values() if s.headline] + [
-            (REGISTRY[q], True) for q in HEADLINE_V2_EXTRA
-        ]
-    times = {}
-    extra_times = {}
-    for spec, is_extra in specs:
-        t0 = time.perf_counter()
-        spec.fn(spark, out_dir).write.format("noop").mode("overwrite").save()
-        sink = extra_times if is_extra else times
-        sink[spec.name] = round(time.perf_counter() - t0, 2)
-        spark.catalog.clearCache()
-        print(f"{spec.name}: {sink[spec.name]}s", flush=True)
+        specs = [s for s in REGISTRY.values() if s.headline]
+        extended = [REGISTRY[q] for q in EXTENDED]
+    mins = time_queries(spark, out_dir, [*specs, *extended], 1)
+    times = {s.name: mins[s.name] for s in specs}
+    extra_times = {s.name: mins[s.name] for s in extended}
     if only and "staged" in only:
         from data_eng_project_spark.pipelines import staging
 
         staged = staging.timed_staged_run(spark, out_dir)
         times["staged_cold_build"] = staged["cold_build_sec"]
         times["staged_warm_consumers"] = staged["warm_consumers_sec"]
-        print(f"staged_cold_build: {times['staged_cold_build']}s", flush=True)
-        print(f"staged_warm_consumers: {times['staged_warm_consumers']}s", flush=True)
     out = {
         "total": round(sum(times.values()), 2),
         "n": n,
