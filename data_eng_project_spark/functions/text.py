@@ -75,10 +75,6 @@ def tokens(col: Column | str) -> Column:
     return F.split(F.trim(_c(col)), r"\s+")
 
 
-def token_count(col: Column | str) -> Column:
-    return F.size(tokens(col))
-
-
 def letter_tokens(col: Column | str) -> Column:
     """Lowercase letter-run tokens ('[^a-z]+' split, empties removed) —
     the corpus-statistics tokenizer shared by tfidf/bm25/CMS/feature-
@@ -108,13 +104,6 @@ def shingles_from_tokens(tok_col: Column | str, n: int = 3) -> Column:
             lambda i: F.array_join(F.slice(t, i, n), " "),
         ),
     ).otherwise(F.expr("CAST(array() AS ARRAY<STRING>)"))
-
-
-def word_shingles(col: Column | str, n: int = 3) -> Column:
-    """n-word shingles straight from a text column (convenience form —
-    for hot paths, project ``tokens(col)`` first and use
-    ``shingles_from_tokens``)."""
-    return shingles_from_tokens(tokens(col), n)
 
 
 def lang_scores(col: Column | str) -> dict[str, Column]:

@@ -28,27 +28,6 @@ from pyspark.sql import functions as F
 
 from data_eng_project_spark.functions.text import shingles_from_tokens, tokens
 
-# Shingle-set caches created by the Jaccard operators (the sets feed both
-# the candidate-index and the exact-verify joins, so they persist()). The
-# returned pair DataFrames hold no handle to release them, so a long-lived
-# session running repeated batches — the bipartite incremental path
-# especially, where the corpus side is the big one — would accumulate
-# executor storage. Callers should release_dedup_caches() once a batch's
-# results are materialized; releasing early is safe (Spark recomputes).
-_PERSISTED: list[DataFrame] = []
-
-
-def _persist_tracked(df: DataFrame) -> DataFrame:
-    _PERSISTED.append(df.persist())
-    return df
-
-
-def release_dedup_caches() -> None:
-    """Unpersist every cache minted by dedup operators so far."""
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist()
-
-
 def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Exact duplicate groups by md5(text); keeps the smallest id as the
     canonical representative (deterministic first-wins)."""
@@ -319,7 +298,7 @@ def ngram_jaccard_pairs(
     result equals the naive all-pairs formulation (which is what the
     DuckDB oracle computes).
     """
-    sets = _persist_tracked(_shingle_sets_direct(df, text_col, id_col, n))
+    sets = _shingle_sets_direct(df, text_col, id_col, n).persist()
     return _ppjoin_pairs_from_sets(sets, threshold)
 
 
@@ -352,11 +331,9 @@ def _ppjoin_pairs_from_sets(sets: DataFrame, threshold: float) -> DataFrame:
     # role condition — y strictly smaller, ties broken by id — assigns
     # each unordered pair exactly one (x, y) orientation, so no
     # distinct() is needed beyond the count groupBy.
-    pref = _persist_tracked(
-        ranked.filter(
-            F.col("_rank") <= F.col("_n") - F.ceil(F.lit(threshold) * F.col("_n")) + 1
-        ).select("_id", "shingle", "_n", "_rank")
-    )
+    pref = ranked.filter(
+        F.col("_rank") <= F.col("_n") - F.ceil(F.lit(threshold) * F.col("_n")) + 1
+    ).select("_id", "shingle", "_n", "_rank").persist()
     probe = pref.select(
         F.col("_id").alias("_idx"), "shingle",
         F.col("_n").alias("_na"), F.col("_rank").alias("_ra"),
@@ -446,9 +423,9 @@ def ngram_jaccard_pairs_collapsed(
     two metadata aggregates + two broadcast builds per query).
     """
     reps = collapse_exact_text_classes(df, text_col, id_col)
-    sets = _persist_tracked(
-        _shingle_sets_direct(reps, text_col, id_col, n, carry_cols=("n_docs",))
-    )
+    sets = _shingle_sets_direct(
+        reps, text_col, id_col, n, carry_cols=("n_docs",)
+    ).persist()
     pairs = _ppjoin_pairs_from_sets(sets, threshold)
     sizes = sets.select(F.col("_id").alias(id_col), "n_docs")
     return _attach_class_sizes(pairs, sizes, id_col)
@@ -691,9 +668,9 @@ def minhash_lsh_pairs(
     # aggregate below reuse the partitioning instead of paying its own
     # shuffle, and the exchange moves (id, text) — fewer bytes than the
     # (_set, _mkeys) arrays the old placement shuffled.
-    sets = _persist_tracked(
-        _shingle_sets_direct(df, text_col, id_col, shingle_n, with_minhash_keys=True)
-    )
+    sets = _shingle_sets_direct(
+        df, text_col, id_col, shingle_n, with_minhash_keys=True
+    ).persist()
     return _lsh_pairs_from_sets(sets, num_hashes, bands, threshold)
 
 
@@ -710,9 +687,7 @@ def _lsh_pairs_from_sets(
     # without this cache each side recomputed the explode + 64-way min
     # aggregate from the sets cache (visible twice in the r12
     # before-plan). 16 small rows per doc; corpus-linear.
-    band_rows = _persist_tracked(
-        lsh_band_rows(sets, num_hashes=num_hashes, bands=bands)
-    )
+    band_rows = lsh_band_rows(sets, num_hashes=num_hashes, bands=bands).persist()
     cand = (
         band_rows.alias("x")
         .join(band_rows.alias("y"), on=["band", "bucket"])
@@ -754,12 +729,10 @@ def minhash_lsh_pairs_collapsed(
     n_docs for both the banded join and the class-size attach — no
     re-aggregation of class sizes from the source corpus."""
     reps = collapse_exact_text_classes(df, text_col, id_col)
-    sets = _persist_tracked(
-        _shingle_sets_direct(
-            reps, text_col, id_col, shingle_n,
-            with_minhash_keys=True, carry_cols=("n_docs",),
-        )
-    )
+    sets = _shingle_sets_direct(
+        reps, text_col, id_col, shingle_n,
+        with_minhash_keys=True, carry_cols=("n_docs",),
+    ).persist()
     pairs = _lsh_pairs_from_sets(sets, num_hashes, bands, threshold)
     sizes = sets.select(F.col("_id").alias(id_col), "n_docs")
     return _attach_class_sizes(pairs, sizes, id_col)
@@ -866,7 +839,7 @@ def simhash_pairs_collapsed(
     and the class-size attach read ONE cache — no separate class-size
     aggregate re-scanning the corpus per attach side."""
     reps = collapse_exact_text_classes(df, text_col, id_col)
-    fps = _persist_tracked(simhash(reps, text_col, id_col, carry_cols=("n_docs",)))
+    fps = simhash(reps, text_col, id_col, carry_cols=("n_docs",)).persist()
     pairs = fingerprint_hamming_pairs(
         fps,
         "simhash",
@@ -941,8 +914,8 @@ def ngram_jaccard_pairs_bipartite(
     batch-side prefix index (a day's ingest) is orders of magnitude
     smaller than the corpus, and AQE picks a broadcast for it.
     """
-    sets_a = _persist_tracked(_shingle_sets_direct(corpus, text_col, id_col, n))
-    sets_b = _persist_tracked(_shingle_sets_direct(batch, text_col, id_col, n))
+    sets_a = _shingle_sets_direct(corpus, text_col, id_col, n).persist()
+    sets_b = _shingle_sets_direct(batch, text_col, id_col, n).persist()
 
     def _index(sets: DataFrame, side: int) -> DataFrame:
         return sets.select(
@@ -965,11 +938,9 @@ def ngram_jaccard_pairs_bipartite(
     # Persisted: pa and pb both derive from this frame, and without the
     # cache each side re-ran the union + frequency aggregate + rank
     # window (same fix as ngram_jaccard_pairs' probing prefix).
-    prefix = _persist_tracked(
-        ranked.filter(
-            F.col("_rank") <= F.col("_n") - F.ceil(F.lit(threshold) * F.col("_n")) + 1
-        )
-    )
+    prefix = ranked.filter(
+        F.col("_rank") <= F.col("_n") - F.ceil(F.lit(threshold) * F.col("_n")) + 1
+    ).persist()
     pa = prefix.filter(F.col("_side") == 0).select(
         F.col("_id").alias("id_a"), "shingle",
         F.col("_n").alias("_na"), F.col("_rank").alias("_ra"),
@@ -1070,7 +1041,7 @@ def ngram_containment_pairs(
 
     Returns (id_a, id_b, containment), id_a < id_b.
     """
-    sets = _persist_tracked(_shingle_sets_direct(df, text_col, id_col, n))
+    sets = _shingle_sets_direct(df, text_col, id_col, n).persist()
     return _containment_pairs_from_sets(sets, threshold)
 
 
@@ -1145,9 +1116,9 @@ def ngram_containment_pairs_collapsed(
     Like ngram_jaccard_pairs_collapsed (r13): one sets cache carries
     n_docs for both the containment join and the class-size attach."""
     reps = collapse_exact_text_classes(df, text_col, id_col)
-    sets = _persist_tracked(
-        _shingle_sets_direct(reps, text_col, id_col, n, carry_cols=("n_docs",))
-    )
+    sets = _shingle_sets_direct(
+        reps, text_col, id_col, n, carry_cols=("n_docs",)
+    ).persist()
     pairs = _containment_pairs_from_sets(sets, threshold)
     sizes = sets.select(F.col("_id").alias(id_col), "n_docs")
     return _attach_class_sizes(pairs, sizes, id_col, value_col="containment")

@@ -17,7 +17,6 @@ from data_eng_project_spark.plans.flagship import (
     _sites,
 )
 from data_eng_project_spark.plans.registry import register
-from data_eng_project_spark.session import prepare
 from data_eng_project_spark.tables import load_table
 
 _DEC = "decimal(28,6)"
@@ -36,7 +35,6 @@ _DEC = "decimal(28,6)"
 )
 def cube_order_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE over status × segment (all four grouping combinations)."""
-    prepare(spark)
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
     return (
@@ -64,7 +62,6 @@ def cube_order_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS (by flag, by status, grand total)."""
-    prepare(spark)
     load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     return spark.sql(
         """
@@ -91,7 +88,6 @@ def grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def semi_join_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXISTS-correlated subquery → left-semi join."""
-    prepare(spark)
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_discount") > 0.09)
     return orders.join(
@@ -116,7 +112,6 @@ def scalar_subquery_above_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~1e-9 — and they agree exactly here because both average the same
     doubles (verified empirically); the avg itself is never output.
     """
-    prepare(spark)
     load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
     return spark.sql(
         "SELECT c_custkey, c_acctbal FROM customer "
@@ -140,7 +135,6 @@ def scalar_subquery_above_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def conditional_aggregation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot-style conditional aggregation (FILTER / sum-when)."""
-    prepare(spark)
     orders = load_table(spark, sf_dir, "orders")
 
     def when_status(s: str) -> F.Column:
@@ -172,7 +166,6 @@ def conditional_aggregation(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def null_handling_scalars(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NULL-handling scalar surface: coalesce / nullif / CASE / IS NULL."""
-    prepare(spark)
     events = load_table(spark, sf_dir, "events")
     return events.select(
         "event_id",
@@ -207,7 +200,6 @@ def null_handling_scalars(spark: SparkSession, sf_dir: str) -> DataFrame:
 def flagship_density_power_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's intended correlation (A3): proximity density vs a
     derived site-power attribute — df.stat-style corr as a query."""
-    prepare(spark)
     from data_eng_project_spark.operators.spatial import near_join
 
     pairs = near_join(_points(spark, sf_dir), _sites(spark, sf_dir), radius_km=RADIUS_KM)
@@ -244,7 +236,6 @@ def approx_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the sketch (deterministic: Spark's HLL on fixed data is
     repeatable), unlike the earlier rows-only form whose one r1 driver
     row recorded err:no_oracle."""
-    prepare(spark)
     events = load_table(spark, sf_dir, "events")
     rsd = 0.02
     agg = events.groupBy("event_type").agg(
@@ -279,7 +270,6 @@ def distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark executes this as an expand + two-phase aggregate: partial
     distinct sets shrink map-side, so the shuffle carries distinct
     (event_type, user_id) pairs, not raw events."""
-    prepare(spark)
     events = load_table(spark, sf_dir, "events")
     return events.groupBy("event_type").agg(
         F.countDistinct("user_id").cast("bigint").alias("n_users"),
@@ -304,7 +294,6 @@ def percentile_price_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     same definition as the oracle's quantile_cont). Spark's `percentile`
     is a full-sort-per-group aggregate; at scale you'd flip to
     approx_percentile, which is sketch-based and engine-specific."""
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem")
     pct = F.expr("percentile(l_extendedprice, array(0.25D, 0.5D, 0.75D))")
     return (
@@ -335,7 +324,6 @@ def pivot_status_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """True `.pivot()` (wide output). The pivot values are declared
     explicitly — at scale, never let Spark run the implicit
     distinct-values pre-query."""
-    prepare(spark)
     orders = load_table(spark, sf_dir, "orders")
     wide = (
         orders.groupBy("o_orderpriority")
@@ -367,7 +355,6 @@ def pivot_status_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def unpivot_status_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """melt/unpivot: wide per-status counts back to long form."""
-    prepare(spark)
     orders = load_table(spark, sf_dir, "orders")
     wide = (
         orders.groupBy("o_orderpriority")
@@ -406,7 +393,6 @@ def stratified_sample_deterministic(spark: SparkSession, sf_dir: str) -> DataFra
     'F', 100% of others) keyed on a deterministic function of the row id
     — reproducible across engines and runs, unlike seeded `sampleBy`,
     and a pure pushdown-friendly filter at scale."""
-    prepare(spark)
     orders = load_table(spark, sf_dir, "orders")
     rate = (
         F.when(F.col("o_orderstatus") == "O", 1)

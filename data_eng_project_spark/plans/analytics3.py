@@ -16,7 +16,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_eng_project_spark.plans.registry import register
-from data_eng_project_spark.session import prepare
 from data_eng_project_spark.tables import load_table
 
 _DEC = "decimal(28,6)"
@@ -40,7 +39,6 @@ def q4_priority_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape: orders in a date window with at least one line
     shipped after the order date — EXISTS → left-semi join, date filter
     pushed to the orders scan."""
-    prepare(spark)
     orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1996-07-01").cast("timestamp"))
@@ -72,7 +70,6 @@ def q4_priority_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q12_shipmode_severity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q12 shape: priority-severity counts per line status over an
     orders⋈lineitem join with the date filter pushed to the fact scan."""
-    prepare(spark)
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp")
@@ -106,7 +103,6 @@ def q14_promo_revenue_pct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 shape: promo revenue share for one month. The part
     dimension broadcasts; revenue sums stay decimal until the final
     ratio so both engines divide identical exact sums."""
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-03-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
@@ -145,7 +141,6 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 shape: orders whose total quantity exceeds a threshold
     (aggregate → HAVING). The quantity rollup happens on the fact before
     the customer join so only qualifying orders shuffle to the dim."""
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
     qty = (
         li.groupBy("l_orderkey")
@@ -191,7 +186,6 @@ def nation_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7/Q8 spirit: each supplier nation's revenue share — a
     grouped aggregate with an unpartitioned window total on the tiny
     aggregated result (25 nations), not on the fact table."""
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_suppkey", "l_extendedprice", "l_discount"
     )
@@ -227,7 +221,6 @@ def nation_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q2_max_order_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q2 shape: correlated scalar subquery per group — Catalyst
     decorrelates it into an aggregate + equi-join (no per-row re-scan)."""
-    prepare(spark)
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return spark.sql(
         """
@@ -259,7 +252,6 @@ def q15_top_revenue_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15 shape: revenue rollup reused twice (join input + scalar
     max) — exact decimal revenue so the max-equality filter is
     deterministic across engines."""
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem")
     sup = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     rev = (
@@ -298,7 +290,6 @@ def salted_join_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/skew.py) — the hot-key mitigation for when AQE skew
     splitting isn't enough. The oracle runs the plain join: salting must
     be semantically invisible, and this query proves it on real data."""
-    prepare(spark)
     from data_eng_project_spark.operators.skew import salted_join
 
     li = load_table(spark, sf_dir, "lineitem").select(
@@ -332,7 +323,6 @@ def salted_join_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 def top_supplier_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 suppliers by balance per nation: window-over-join with a
     deterministic tie-break."""
-    prepare(spark)
     sup = load_table(spark, sf_dir, "supplier")
     nat = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     w = Window.partitionBy("n_name").orderBy(
@@ -363,7 +353,6 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6: the canonical predicate-pushdown query — every filter
     (date range, discount band, quantity cap) reaches the parquet scan;
     zero joins, one exact decimal sum."""
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return (
         li.filter(
@@ -408,7 +397,6 @@ def q10_returned_item_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 shape: top-20 customers by returned-item revenue in a
     quarter. Decimal revenue makes the top-k cut deterministic; the
     LIMIT compiles to TakeOrderedAndProject."""
-    prepare(spark)
     cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_name")
     orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -451,7 +439,6 @@ def q19_disjunctive_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q19 shape: OR-of-conjunctions across both join sides — the
     optimizer must split the common part (join key) from the per-branch
     residuals instead of falling back to a cross product."""
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
     joined = li.join(F.broadcast(part), li["l_partkey"] == part["p_partkey"])
@@ -496,7 +483,6 @@ def q13_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q13 shape: customer-order-count histogram via LEFT OUTER
     join — customers with zero orders must survive to the n_orders=0
     bucket (count(o_orderkey) ignores the NULLs the outer join mints)."""
-    prepare(spark)
     cust = load_table(spark, sf_dir, "customer").select("c_custkey")
     orders = load_table(spark, sf_dir, "orders").select("o_custkey", "o_orderkey")
     per_cust = (
@@ -525,7 +511,6 @@ def q16_parts_never_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     planning path); the subquery is windowed to high-quantity lines so
     the result is non-empty (114 parts at sf0.01 — a 0-row result would
     be a trivial oracle match)."""
-    prepare(spark)
     load_table(spark, sf_dir, "part").createOrReplaceTempView("part")
     load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     return spark.sql(
@@ -561,7 +546,6 @@ def full_outer_activity_reconciliation(spark: SparkSession, sf_dir: str) -> Data
     """FULL OUTER reconciliation of two activity sources (event counts vs
     order counts per user) — rows surviving from either side with
     presence flags; the audit-join every pipeline migration needs."""
-    prepare(spark)
     e = (
         load_table(spark, sf_dir, "events")
         .groupBy("user_id")
@@ -614,7 +598,6 @@ def events_hourly_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     The dense hour spine is generated distributed (sequence+explode on
     the 1-row bounds aggregate crossed with the tiny type dim) — no
     driver-side date loop."""
-    prepare(spark)
     events = load_table(spark, sf_dir, "events")
     bounds = events.agg(
         F.date_trunc("hour", F.min("ts")).alias("lo"),
@@ -677,7 +660,6 @@ def join_fanout_hotspots(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates, so the diagnostic joins two count tables and top-k's via
     TakeOrdered — cost is linear in the inputs and independent of the
     predicted fanout."""
-    prepare(spark)
     events = load_table(spark, sf_dir, "events")
     orders = load_table(spark, sf_dir, "orders")
     left = events.groupBy(F.col("user_id").alias("k")).agg(
@@ -754,7 +736,6 @@ def interpolate_user_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle, no self-join against the observation table; the interp
     expression is plain IEEE double arithmetic in the same tree the
     oracle evaluates."""
-    prepare(spark)
     events = load_table(spark, sf_dir, "events")
     g = events.select(
         "event_id",

@@ -14,7 +14,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_eng_project_spark.plans.registry import register
-from data_eng_project_spark.session import prepare
 from data_eng_project_spark.tables import load_table
 
 _DEC = "decimal(28,6)"
@@ -109,7 +108,6 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id, so every stage shuffles on the same key and AQE reuses the
     partitioning. Stage populations shrink monotonically; the final
     counts are one-row aggregates."""
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events").select("user_id", "event_type", "ts")
     v, c, p = _funnel_stage_times(ev)
     return (
@@ -145,7 +143,6 @@ def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncate weeks to Monday, so the difference is always a multiple of
     7 — no engine-specific week-diff semantics). Two shuffles: per-user
     min, then the cohort-cell distinct+count."""
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts")
     first_seen = ev.groupBy("user_id").agg(
         F.to_date(F.date_trunc("week", F.min("ts"))).alias("cohort_week_d")
@@ -195,7 +192,6 @@ def scd2_customer_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     the as-of join in plans/temporal.py for point-in-time lookups). One
     shuffle, partitioned by the dimension key; the unique o_orderkey
     tie-break makes interval boundaries deterministic."""
-    prepare(spark)
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     nxt = F.lead("o_orderdate").over(w)
     return load_table(spark, sf_dir, "orders").select(
@@ -231,7 +227,6 @@ def profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     in one scan except the two exact distincts, which Spark expands with
     one extra exchange; at 100 TB you'd flip those to HLL
     (approx_count_distinct, see approx_distinct_users)."""
-    prepare(spark)
     o = load_table(spark, sf_dir, "orders")
     return o.agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -273,7 +268,6 @@ def null_safe_join_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL matches NULL, exactly once. Compiles to a plain hash join on
     the null-safe comparator, not a nested loop; the dimension side
     broadcasts."""
-    prepare(spark)
     keyed = load_table(spark, sf_dir, "events").select(
         F.when(F.col("event_type") == "error", F.lit(None))
         .otherwise(F.col("event_type"))
@@ -316,8 +310,6 @@ def locf_user_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     last_value — the standard LOCF gap-fill, one window shuffle on the
     series key. Leading gaps (no prior observation) stay NULL on both
     engines."""
-
-    prepare(spark)
     g = load_table(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
@@ -368,7 +360,6 @@ def zscore_outlier_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     the |z|>3 cut selects identical rows — then one broadcast join back
     to score the stream. Single fact scan for stats (decimal partial
     aggs), single scan to score; no window, no sort."""
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
     stats = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
@@ -412,7 +403,6 @@ def sql_api_revenue_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcastable dims, pushed date filter, distinct-agg expansion.
     Everything else in this registry uses the DataFrame API; this entry
     proves the SQL surface serves the same engine."""
-    prepare(spark)
     for t in ("lineitem", "orders", "customer", "nation"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(f"v_{t}")
     return spark.sql(
@@ -456,7 +446,6 @@ def histogram_order_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor((v-lo)/w) expression on both engines (max clamped into the
     last bin), so bucket boundaries are bit-identical. One scan for
     bounds (broadcast one-row), one scan to bucket."""
-    prepare(spark)
     o = load_table(spark, sf_dir, "orders").select("o_totalprice")
     b = o.agg(
         F.min(F.col("o_totalprice").cast(_DEC)).cast("double").alias("lo"),
@@ -497,8 +486,6 @@ def trailing_hour_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle's RANGE INTERVAL frame covers, including tie/peer-row
     semantics. One window shuffle on the series key; decimal sums keep
     the frame aggregate exact."""
-
-    prepare(spark)
     w = (
         Window.partitionBy("user_id")
         .orderBy(F.unix_micros("ts"))
@@ -553,7 +540,6 @@ def pareto_customer_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     running sum bit-identical to the oracle's global window), and the
     grand total is a broadcast one-row aggregate instead of an
     unbounded window."""
-    prepare(spark)
     from data_eng_project_spark.operators.datasetops import distributed_order_cumsum
 
     # No materialization of the fan-out (r13, measured tie: lc 1.017 s
@@ -608,7 +594,6 @@ def market_basket_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     C(parts_in_order, 2) — bounded by basket size (~7), NOT by table
     size, so the candidate count stays ~20× orders at any scale; the
     '<' predicate halves it and dedups mirror pairs."""
-    prepare(spark)
     op = (
         load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
@@ -676,7 +661,6 @@ def data_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs (see operators/quality.dq_report)."""
     from data_eng_project_spark.operators.quality import dq_orphan_count, dq_report
 
-    prepare(spark)
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
     report = dq_report(
@@ -746,7 +730,6 @@ def cusum_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
     (see operators/temporal.cusum_hourly_changepoints)."""
     from data_eng_project_spark.operators.temporal import cusum_hourly_changepoints
 
-    prepare(spark)
     return cusum_hourly_changepoints(load_table(spark, sf_dir, "events"))
 
 
@@ -789,7 +772,6 @@ def attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     per purchase."""
     from data_eng_project_spark.operators.temporal import asof_join
 
-    prepare(spark)
     events = load_table(spark, sf_dir, "events")
     touches = _attribution_touches(events).withColumn("touch_ts", F.col("ts"))
     purch = _attribution_purchases(events)
@@ -867,7 +849,6 @@ def mad_outlier_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     continuous domains the engine's general form is
     operators/datasetops.distributed_rank_select (sort only the one
     percentile bucket containing the target rank)."""
-    prepare(spark)
     # No materialization (r13, measured tie: lc 1.002 s vs no-cache
     # 0.974 s min-of-6): the fan-out recomputes a 2-column
     # pruned-pushdown parquet scan — cheaper than a checkpoint's forced
@@ -968,7 +949,6 @@ def attribution_first_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     range predicate (bounded by per-user event density — AQE handles
     hot users), then a min-struct aggregate picks the first touch and
     its channel in one pass; 'none' when the window is empty."""
-    prepare(spark)
     events = load_table(spark, sf_dir, "events")
     touches = _attribution_touches(events, ts_alias="tts")
     purch = _attribution_purchases(events)
@@ -1035,7 +1015,6 @@ def log_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     and DuckDB's libm may differ by an ulp exactly at a bucket
     boundary); integer decimal-digit extraction and a '1e<k>'-literal
     cast are bit-identical everywhere."""
-    prepare(spark)
     orders = load_table(spark, sf_dir, "orders")
     s = F.floor(F.col("o_totalprice")).cast("bigint").cast("string")
     b = (
@@ -1103,7 +1082,6 @@ def chisq_source_lang_independence(spark: SparkSession, sf_dir: str) -> DataFram
     arithmetic (identical on both engines); the cross-cell sum goes
     through DECIMAL(38,12) so accumulation order cannot move the
     result."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     obs = docs.groupBy("source", "lang").agg(F.count(F.lit(1)).alias("o"))
     m = obs.groupBy("source").agg(F.sum("o").alias("rs"))
@@ -1183,7 +1161,6 @@ def attribution_time_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     division is bit-exact everywhere. Per-purchase weight sums and the
     channel rollup accumulate in DECIMAL(38,12) (order-free); each
     credit term is pure IEEE arithmetic on identical inputs."""
-    prepare(spark)
     events = load_table(spark, sf_dir, "events")
     touches = _attribution_touches(events, ts_alias="tts")
     purch = _attribution_purchases(events, ts_alias="pts")
@@ -1269,7 +1246,6 @@ def benford_price_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
     string-based (deterministic); the expected shares log10(1+1/d) are
     shared 12-digit literals on both engines, so no transcendental is
     evaluated at query time."""
-    prepare(spark)
     orders = load_table(spark, sf_dir, "orders")
     s = F.floor(F.col("o_totalprice")).cast("bigint").cast("string")
     obs = (
@@ -1324,7 +1300,6 @@ def grouped_value_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     the implementation, not a mirrored plan. At scale exact grouped
     percentiles are one sort-based shuffle per group partition; the
     sketch alternative is log_histogram_quantiles."""
-    prepare(spark)
     events = load_table(spark, sf_dir, "events")
     return events.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
@@ -1376,7 +1351,6 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     ntile(5), plan-gated. The rollup's groupBy exchange is computed
     once and reused across the axis consumers (AQE exchange reuse);
     the orders scan stays one partial-aggregable groupBy."""
-    prepare(spark)
     from data_eng_project_spark.operators.datasetops import distributed_order_rank
 
     orders = load_table(spark, sf_dir, "orders")
@@ -1466,7 +1440,6 @@ def funnel_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchase — the time-to-convert profile behind campaign-window
     decisions. Exact percentile over the converter rollup (one row per
     converting user)."""
-    prepare(spark)
     ev = load_table(spark, sf_dir, "events").select("user_id", "event_type", "ts")
     v, c, p = _funnel_stage_times(ev)
     d = p.join(v, on="user_id").select(
@@ -1511,7 +1484,6 @@ def new_vs_returning_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     same unit. First-seen times are one user-keyed aggregate
     (broadcastable at dimension scale); the hourly rollup is a single
     conditional aggregate over the fact scan."""
-    prepare(spark)
     events = load_table(spark, sf_dir, "events")
     f = events.groupBy("user_id").agg(F.min("ts").alias("first_ts"))
     joined = events.join(f, on="user_id")
@@ -1558,7 +1530,6 @@ def order_lead_time_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders⋈lineitem equi-join rolled up per order (partial-aggregable
     min), then a priority-keyed exact percentile over the order-sized
     rollup."""
-    prepare(spark)
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
     lt = (
@@ -1611,7 +1582,6 @@ def part_supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     flag a procurement review sorts by. Two partial-aggregable
     rollups; decimal share-square sums so partition order cannot move
     the 6-dp result."""
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem")
     s = li.groupBy("l_partkey", "l_suppkey").agg(
         F.sum(F.col("l_extendedprice").cast("decimal(28,6)")).alias("rev")
@@ -1660,8 +1630,6 @@ def weekly_growth_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     window over the rollup-sized series — the dashboard growth-rate
     table, NULL on the first week of each series. The window runs on
     |weeks|×|types| rows, never the fact table."""
-    prepare(spark)
-
     events = load_table(spark, sf_dir, "events")
     w = events.groupBy(
         F.date_trunc("week", "ts").alias("week_start"), "event_type"
@@ -1718,8 +1686,6 @@ def clv_cohort_curves(spark: SparkSession, sf_dir: str) -> DataFrame:
     cohort member — the retention economics table. Fact work is two
     partial-aggregable rollups; the cumulative window runs on the
     cohorts×months grid. Decimal revenue accumulation end to end."""
-    prepare(spark)
-
     orders = load_table(spark, sf_dir, "orders")
     fo = orders.groupBy("o_custkey").agg(
         F.date_trunc("month", F.min("o_orderdate")).alias("cohort")
@@ -1773,7 +1739,6 @@ def discount_band_effects(spark: SparkSession, sf_dir: str) -> DataFrame:
     volume, quantity moved, net revenue, and revenue given away — the
     q19-flavored scan every pricing review starts from. One
     partial-aggregable rollup with decimal money math."""
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy(
         F.round(F.col("l_discount") * 100).cast("bigint").alias("discount_pct")
@@ -1828,7 +1793,6 @@ def supplier_ship_delay(spark: SparkSession, sf_dir: str) -> DataFrame:
     delay — the vendor SLA row (this schema carries no commit date, so
     order date is the clock). One equi-join + conditional rollup with
     decimal-exact delay sums."""
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_shipdate"
     )
@@ -1880,7 +1844,6 @@ def order_status_mix_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-status composition per month with within-month shares —
     the fulfillment-mix trend (a growing 'F' share means the backlog
     is clearing). Rollup + broadcast month totals."""
-    prepare(spark)
     orders = load_table(spark, sf_dir, "orders")
     m = orders.groupBy(
         F.date_format(F.date_trunc("month", "o_orderdate"), "yyyy-MM").alias(

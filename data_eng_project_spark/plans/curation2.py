@@ -35,7 +35,6 @@ from data_eng_project_spark.operators.curation import (
     vocab_profile,
 )
 from data_eng_project_spark.plans.registry import register
-from data_eng_project_spark.session import prepare
 from data_eng_project_spark.tables import load_table
 
 # Sits just below the corpus median avg-logprob (sf0.01: min −3.70,
@@ -94,7 +93,6 @@ def unigram_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     log-probability under a corpus-trained unigram model; the model
     aggregate broadcasts to the scoring join (see
     operators/curation.unigram_lm_scores for the scale design)."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     return unigram_lm_scores(docs, keep_threshold=_LM_KEEP_THRESHOLD)
 
@@ -164,7 +162,6 @@ def pii_detect_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII scrub stage over deterministically-dirtied text: per document,
     email/phone/IPv4 hit counts and the md5 of the category-redacted
     text. Map-only regexp work in codegen — no shuffle at any scale."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     dirty = docs.select("doc_id", _aug_spark().alias("text"))
     return pii_scan(dirty)
@@ -202,7 +199,6 @@ def bigram_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-break) — boilerplate detection / corpus fingerprinting stats.
     Bigrams are built by array transform (no window, no self-join); the
     only shuffle is the word-count-shaped (source, bigram) aggregate."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     return top_bigrams_by_source(docs, k=_TOP_BIGRAMS_K)
 
@@ -231,7 +227,6 @@ def vocab_profile_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source lexical-diversity rollup: tokens, types, hapax
     legomena, type-token ratio — two partial-aggregable word-count
     aggregates; ratios are exact-integer divisions."""
-    prepare(spark)
     return vocab_profile(load_table(spark, sf_dir, "documents"))
 
 
@@ -278,7 +273,6 @@ def quality_model_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     features (mean word length, stopword share, distinct-word ratio);
     thresholding the logit at 0 is the classifier decision (sigmoid is
     monotone, so no exp() enters the compared output)."""
-    prepare(spark)
     return quality_model_scores(load_table(spark, sf_dir, "documents"))
 
 
@@ -304,7 +298,6 @@ def cross_source_dup_matrix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalized-content fingerprints and the cross-source doc pairs they
     induce — fp-keyed equi-join, duplication-shaped output (see
     operators/curation.cross_source_dup_matrix for the scale notes)."""
-    prepare(spark)
     return cross_source_dup_matrix(load_table(spark, sf_dir, "documents"))
 
 
@@ -336,7 +329,6 @@ def domain_mixture_weights_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DoReMi-style domain reweighting table: per-source doc/token shares
     and the uniform-target sampling weight — one partial-aggregable
     rollup plus a broadcast 1-row totals join."""
-    prepare(spark)
     return domain_mixture_weights(load_table(spark, sf_dir, "documents"))
 
 
@@ -371,7 +363,6 @@ def token_fertility_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer fertility by language: corpus-level chars per whitespace
     token, chars per BPE-ish token, and the BPE blow-up ratio — exact
     integer sums, one shuffle."""
-    prepare(spark)
     return token_fertility_profile(load_table(spark, sf_dir, "documents"))
 
 
@@ -436,7 +427,6 @@ def bigram_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     domain-shift signal (see operators/curation.bigram_lm_scores)."""
     from data_eng_project_spark.operators.curation import bigram_lm_scores
 
-    prepare(spark)
     return bigram_lm_scores(
         load_table(spark, sf_dir, "documents"), alpha=_BACKOFF_ALPHA
     )
@@ -482,7 +472,6 @@ def psi_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     go through DECIMAL so bucket order cannot move the result. One
     grouped count is the only corpus-sized pass; the pair join runs on
     |sources|×|buckets| rows."""
-    prepare(spark)
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
@@ -588,7 +577,6 @@ def collocation_lift_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins + a 1-row totals broadcast + TakeOrdered top-k
     (operators/curation.collocation_lift); no corpus window, no
     self-join."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     return collocation_lift(docs, min_count=_COLLOC_MIN_COUNT, k=_COLLOC_K)
 
@@ -650,7 +638,6 @@ def vocab_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_eng_project_spark.functions.text import letter_tokens
     from pyspark.sql import Window
 
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     d = docs.select(
         md5_bucket("doc_id", 10).alias("batch"),

@@ -45,7 +45,6 @@ from data_eng_project_spark.plans.textdata import (
     _ngram_ctes,
     JACCARD_THRESHOLD,
 )
-from data_eng_project_spark.session import prepare
 from data_eng_project_spark.tables import TABLE_NAMES, load_table
 
 _PPS_K = 10
@@ -83,7 +82,6 @@ def pps_sample_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     subset whose inclusion probability tracks how much of the token
     budget each document represents. Pure BIGINT arithmetic: no RNG,
     identical on any engine."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     return pps_systematic_sample(
         docs, weight_col="n_chars", strata_col="source", id_col="doc_id",
@@ -149,7 +147,6 @@ def winsorize_length_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-aggregable rollup. The DuckDB twin's plain rank window
     selects the identical value because the value AT a rank is
     deterministic under ties."""
-    prepare(spark)
     from data_eng_project_spark.operators.datasetops import winsorize_group_stats
 
     docs = load_table(spark, sf_dir, "documents")
@@ -189,7 +186,6 @@ def per_user_value_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouped regression via the map-side-combinable sufficient-statistics
     formulation (each group reduces to five exact sums; the closed form
     runs on the aggregate, never the rows)."""
-    prepare(spark)
     events = load_table(spark, sf_dir, "events")
     return groupwise_ols(
         events, key_col="user_id", order_cols=["ts", "event_id"],
@@ -226,7 +222,6 @@ def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     session history: lead() over each user's timeline, then a
     |states|²-cardinality aggregate — the normalization window runs on
     the tiny aggregate, not the events."""
-    prepare(spark)
     events = load_table(spark, sf_dir, "events")
     return transition_matrix(
         events, key_col="user_id", order_cols=["ts", "event_id"],
@@ -279,7 +274,6 @@ def snapshot_diff_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     join + a 4-row aggregate. The snapshot derivations are test
     plumbing computed identically on both engines; the operator under
     test is the null-safe keyed diff."""
-    prepare(spark)
     orders = load_table(spark, sf_dir, "orders")
     a = orders.filter(F.col("o_orderkey") % 97 < 90).select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -341,7 +335,6 @@ def quality_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     distribution, making per-source score scales comparable before one
     global keep-threshold — exact integer empirical-quantile lookup,
     no floating-point percent_rank anywhere."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     return quantile_normalize(
         docs, score_col="n_chars", strata_col="source", id_col="doc_id"
@@ -378,7 +371,6 @@ def dedup_canonical_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pipelines/staging.py) — the expensive pair join and the iterative
     components run once per corpus, shared with PageRank / triangles /
     soft-dedup / the leakage audit."""
-    prepare(spark)
     from data_eng_project_spark.pipelines.staging import dup_components
 
     docs = load_table(spark, sf_dir, "documents")
@@ -417,7 +409,6 @@ def fuzzy_part_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross join) then exact Levenshtein verification ≤ 3 — the classic
     block-then-verify shape, over the engine-native levenshtein (JVM
     codegen on the Spark side, identical metric on DuckDB)."""
-    prepare(spark)
     part = load_table(spark, sf_dir, "part")
     return fuzzy_name_pairs(part, "p_name", max_distance=_FUZZY_MAX_DIST)
 
@@ -462,7 +453,6 @@ def chunk_documents_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     The loader-side complement of pack_sequences_chunked (which packs
     WITHOUT overlap for pretraining; retrieval chunking overlaps so no
     boundary-spanning answer is lost)."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     return chunk_documents(
         docs, "text", "doc_id", window=_CHUNK_W, stride=_CHUNK_S
@@ -490,7 +480,6 @@ def incremental_join_view_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     rescanned. The oracle is the full recompute over all orders, so
     the parity check certifies that delta maintenance and recompute
     agree exactly."""
-    prepare(spark)
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("o_custkey"),
@@ -576,7 +565,6 @@ def pagerank_dup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/clusters.pagerank). Reads the STAGED pair graph and
     components (pipelines/staging.py), so neither the similarity join
     nor the component fixpoint re-runs here."""
-    prepare(spark)
     from data_eng_project_spark.pipelines.staging import (
         dup_components,
         near_dup_pairs,
@@ -613,7 +601,6 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Broder's resemblance-vs-containment distinction; the quote /
     boilerplate / partial-scrape detector). Prefix-filtered inverted
     index, exact array_intersect verify (operators/dedup.py)."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     return D.ngram_containment_pairs(
         docs, "text", "doc_id", n=3, threshold=_CONTAINMENT_T
@@ -659,7 +646,6 @@ def dedup_containment_pairs_collapsed(spark: SparkSession, sf_dir: str) -> DataF
     containment join runs over representatives only — the collapse-first
     posture the dup-heavy probes mandated for every pair family
     (operators/dedup.ngram_containment_pairs_collapsed)."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     return D.ngram_containment_pairs_collapsed(
         docs, "text", "doc_id", n=3, threshold=_CONTAINMENT_T
@@ -708,7 +694,6 @@ def dup_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     triangle found exactly once, no cross join — over the STAGED pair
     graph (pipelines/staging.py): the triangle join's two self-joins
     hit a parquet pair list, not two fresh similarity joins."""
-    prepare(spark)
     from data_eng_project_spark.pipelines.staging import near_dup_pairs
 
     pairs = near_dup_pairs(spark, sf_dir, n=3, threshold=JACCARD_THRESHOLD)
@@ -768,7 +753,6 @@ def knn_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     label. Output carries the withheld truth so accuracy is a single
     downstream aggregate — the auto-labeling primitive for extending a
     small labeled seed set across a large corpus."""
-    prepare(spark)
     from data_eng_project_spark.operators.similarity import knn_join_blocked
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -831,7 +815,6 @@ def catalog_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     what a dataset release pins so consumers can verify they read the
     same catalog version. Each table contributes one count scan
     (columnar count(*) reads footers, not data)."""
-    prepare(spark)
     parts = []
     for t in _MANIFEST_TABLES:
         df = load_table(spark, sf_dir, t)
@@ -893,7 +876,6 @@ def dup_graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the similarity join and the component fixpoint are shared with
     the other five graph consumers, and the BFS itself re-scans a
     parquet edge list each round."""
-    prepare(spark)
     from data_eng_project_spark.pipelines.staging import (
         dup_components,
         near_dup_pairs,
@@ -944,7 +926,6 @@ def er_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/datasetops.sorted_neighborhood_pairs) and turns the
     window into a rank-arithmetic equi-join, so no corpus-wide
     single-partition stage exists at any scale."""
-    prepare(spark)
     part = load_table(spark, sf_dir, "part")
     return sorted_neighborhood_pairs(
         part, "p_name", window=_SNM_WINDOW, max_distance=_SNM_MAX_DIST
@@ -995,7 +976,6 @@ def dup_graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     this scores EDGES). Wedge counting via two equi-joins over the
     STAGED pair graph (pipelines/staging.py) — see
     operators/clusters.common_neighbor_stats."""
-    prepare(spark)
     from data_eng_project_spark.pipelines.staging import near_dup_pairs
 
     pairs = near_dup_pairs(spark, sf_dir, n=3, threshold=JACCARD_THRESHOLD)
@@ -1072,7 +1052,6 @@ def er_entity_groups_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     themselves) — the full dedup-a-reference-registry pipeline, built
     from the same blocking operators registered individually
     (operators/datasetops.er_entity_groups)."""
-    prepare(spark)
     part = load_table(spark, sf_dir, "part")
     return er_entity_groups(
         part, "p_name", window=_ER_WINDOW, max_distance=_ER_MAX_DIST
@@ -1122,7 +1101,6 @@ def priority_sample_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-budget eval draws biased toward token-heavy documents. No
     RNG, reproducible on any cluster size
     (operators/datasetops.priority_sample)."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     return priority_sample(
         docs, weight_col="n_chars", strata_col="source", id_col="doc_id",
@@ -1165,7 +1143,6 @@ def split_exact_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     expectation. Pure integer quota arithmetic, one per-stratum window
     + a dimension-sized count broadcast
     (operators/datasetops.exact_quota_split)."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     return exact_quota_split(
         docs, strata_col="source", id_col="doc_id",
@@ -1223,7 +1200,6 @@ def session_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension-sized. n_sessions is a distinct count over (user,
     session) pairs — the skew-safe two-key distinct, not a string
     concat."""
-    prepare(spark)
     events = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(F.col("ts").asc(), F.col("event_id").asc())
     us = F.unix_micros(F.col("ts"))
@@ -1294,7 +1270,6 @@ def table_checksum_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         md5_full_bucket_int,
     )
 
-    prepare(spark)
     orders = load_table(spark, sf_dir, "orders")
     sep = F.lit("\x1f")
     null = F.lit("<NULL>")

@@ -25,7 +25,6 @@ from data_eng_project_spark.functions.geo import (
 )
 from data_eng_project_spark.operators.spatial import near_join
 from data_eng_project_spark.plans.registry import register
-from data_eng_project_spark.session import prepare
 from data_eng_project_spark.tables import load_table
 
 RADIUS_KM = 300.0
@@ -85,7 +84,6 @@ def flagship_points_near_sites(spark: SparkSession, sf_dir: str) -> DataFrame:
     RADIUS_KM. Spark runs the grid-cell candidate join + exact haversine
     filter; the oracle brute-forces the cross join — identical results,
     very different asymptotics."""
-    prepare(spark)
     pairs = near_join(
         _points(spark, sf_dir),
         _sites(spark, sf_dir),
@@ -115,7 +113,6 @@ def flagship_site_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's intended analysis shape (A3): count of points
     within the radius of each site ("is there more deaths around power
     plants") — proximity join + per-site aggregation."""
-    prepare(spark)
     pairs = near_join(
         _points(spark, sf_dir), _sites(spark, sf_dir), radius_km=RADIUS_KM
     )

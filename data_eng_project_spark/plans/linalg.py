@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 
 from data_eng_project_spark.operators.linalg import fit_pca, pca_variance_report, project
 from data_eng_project_spark.plans.registry import register
-from data_eng_project_spark.session import prepare
 from data_eng_project_spark.tables import load_table
 
 
@@ -25,7 +24,6 @@ def embedding_pca_scree(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-8 eigenvalues of the embedding covariance with explained /
     cumulative variance — the scree table a curation pipeline reads
     before choosing a reduced dimension."""
-    prepare(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     return pca_variance_report(emb, k=8)
 
@@ -77,7 +75,6 @@ def pca_trace_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fitted decomposition, plus top-8 component orthonormality —
     converting the rows-only PCA family's numpy-twin trust into a
     graded accuracy contract (see operators/linalg.pca_trace_report)."""
-    prepare(spark)
     from data_eng_project_spark.operators.linalg import pca_trace_report
 
     return pca_trace_report(load_table(spark, sf_dir, "embeddings"))
@@ -93,7 +90,6 @@ def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     (centered GEMM per Arrow batch, zero shuffle): (vec_id, pc1..pc4),
     rounded 6 dp under the canonical component signs so repeated runs
     are bit-stable."""
-    prepare(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     mean, comps, _ = fit_pca(emb, k=4)
     proj = project(emb, mean, comps)
@@ -150,7 +146,6 @@ def embedding_health_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-dimension embedding QA (collapsed/dead/un-normalized
     coordinate screen) — exact decimal-accumulated moments, one
     map-side-combinable aggregate over the posexploded coordinates."""
-    prepare(spark)
     from data_eng_project_spark.operators.linalg import embedding_health_report
 
     return embedding_health_report(load_table(spark, sf_dir, "embeddings"))
@@ -241,7 +236,6 @@ def kmeans_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     three iterations as CTEs (the pagerank-oracle technique applied to
     an iterative ML fit). Exactness discipline and 100 TB shape:
     operators/clusters.kmeans_lloyd docstring."""
-    prepare(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     from data_eng_project_spark.operators.clusters import kmeans_lloyd
 
@@ -275,7 +269,6 @@ def pca_projection_agreement_report_q(spark: SparkSession, sf_dir: str) -> DataF
     worst-coordinate projection agreement (one centered GEMM with the
     difference matrix), completing the graded-contract coverage of the
     rows-only PCA family (embedding_pca_scree / embedding_pca_project)."""
-    prepare(spark)
     from data_eng_project_spark.operators.linalg import (
         pca_projection_agreement_report,
     )

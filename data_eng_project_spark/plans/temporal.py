@@ -20,7 +20,6 @@ from data_eng_project_spark.operators.temporal import (
     time_weighted_avg,
 )
 from data_eng_project_spark.plans.registry import register
-from data_eng_project_spark.session import prepare
 from data_eng_project_spark.tables import load_table
 
 
@@ -52,7 +51,6 @@ def asof_latest_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie group IS max(o_orderkey) — the same value the aggregate
     produced, without the aggregate's exchange + two hash passes
     (measured 0.87 → 0.68 s; verified row-identical at sf0.1)."""
-    prepare(spark)
     events = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     orders = load_table(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("user_id"), "o_orderdate", "o_orderkey"
@@ -92,7 +90,6 @@ def events_within_minute(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered pairs of same-type events ≤ 1 minute apart — an interval
     self-join the oracle runs as a pure inequality join; ours compiles to
     a bucketed equi-join (see range_pairs) whose shuffle stays linear."""
-    prepare(spark)
     events = load_table(spark, sf_dir, "events")
     pairs = range_pairs(
         events, ts_col="ts", id_col="event_id", max_gap_seconds=60,
@@ -137,7 +134,6 @@ def ewma_user_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user EWMA of event values (α=0.3) — the order-dependent
     recurrence computed via applyInPandas (see operators/temporal.
     ewma_per_key); one key-hash shuffle, vectorized pandas inside."""
-    prepare(spark)
     from data_eng_project_spark.operators.temporal import ewma_per_key
 
     return ewma_per_key(load_table(spark, sf_dir, "events"))
@@ -170,7 +166,6 @@ def incremental_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         merge_rollup_states,
     )
 
-    prepare(spark)
     events = load_table(spark, sf_dir, "events")
     history = hourly_rollup_state(events.filter(F.col("event_id") % 2 == 0))
     new_batch = hourly_rollup_state(events.filter(F.col("event_id") % 2 == 1))
@@ -205,7 +200,6 @@ def time_weighted_avg_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean: each value weighted by how long it stayed current — the
     TimescaleDB time_weight shape). Exact decimal×microsecond weighted
     sums; only the final division is floating point."""
-    prepare(spark)
     events = load_table(spark, sf_dir, "events")
     return time_weighted_avg(
         events, key_col="user_id", ts_col="ts", value_col="value",
@@ -241,7 +235,6 @@ def events_hourly_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     monitoring downsample. Open/close resolved by rank-1 rows of
     deterministic asc/desc windows (identical tie handling on both
     engines); values pass through with no arithmetic."""
-    prepare(spark)
     events = load_table(spark, sf_dir, "events")
     return hourly_ohlc(
         events, ts_col="ts", value_col="value", order_tiebreak="event_id"
@@ -269,7 +262,6 @@ def hour_of_week_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     baseline table behind seasonality-aware anomaly detection. Day-of-
     week comes from pure epoch arithmetic ((days+4) % 7, Sunday=0) so
     both engines agree without touching locale-dependent date parts."""
-    prepare(spark)
     events = load_table(spark, sf_dir, "events")
     return (
         events.select(
@@ -330,7 +322,6 @@ def seasonal_anomaly_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     conditioning on the 168-slot profile is what stops nightly troughs
     flagging every daytime peak). Profile join is 168 rows — broadcast;
     decimal sums keep μ/σ² order-free; top-100 with a total tie-break."""
-    prepare(spark)
     events = load_table(spark, sf_dir, "events")
     e = events.select(
         "event_id",
@@ -419,7 +410,6 @@ def acf_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning. Costs one rollup + one rollup-sized self-join per
     lag (the lag fan-out is an explode over 6 values, not a shuffle
     multiplier: everything is keyed by event_type)."""
-    prepare(spark)
     events = load_table(spark, sf_dir, "events")
     hc = (
         events.groupBy(
@@ -490,7 +480,6 @@ def asof_next_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     attribution's other half. Union-merge with a FOLLOWING-frame
     first() (operators/temporal.asof_join_forward): one shuffle on the
     user key, no inequality join node, no row explosion."""
-    prepare(spark)
     from data_eng_project_spark.operators.temporal import asof_join_forward
 
     events = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
@@ -559,7 +548,6 @@ def event_debounce_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 5-minute per-(user, type) debounce would keep vs suppress — the
     double-fire/retry-storm accounting run before trusting event
     counts. Gaps-and-islands, one window shuffle."""
-    prepare(spark)
     from data_eng_project_spark.operators.temporal import debounce_events
 
     events = load_table(spark, sf_dir, "events")
@@ -624,7 +612,6 @@ def window_funnel_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     horizon requires — a user whose first view fizzles but whose later
     view converts still counts — and each chain link is one union-merge
     window on the user key, never an inequality join."""
-    prepare(spark)
     from data_eng_project_spark.operators.temporal import asof_join_forward
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -728,7 +715,6 @@ def holt_linear_event_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs per key via applyInPandas (operators/temporal.
     holt_linear_per_key), so state never crosses keys and the Python
     walk is days-long, never corpus-long."""
-    prepare(spark)
     from data_eng_project_spark.operators.temporal import holt_linear_per_key
 
     events = load_table(spark, sf_dir, "events")
@@ -814,7 +800,6 @@ def xcorr_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     then a |types|²×7-cardinality sufficient-statistics aggregate — the
     corr never sees raw events, and every sum it consumes is an exact
     BIGINT."""
-    prepare(spark)
     events = load_table(spark, sf_dir, "events")
     hr = F.floor(
         F.unix_micros(F.date_trunc("hour", F.col("ts"))) / F.lit(3_600_000_000)
@@ -907,7 +892,6 @@ def rollup_retraction_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         negate_rollup_state,
     )
 
-    prepare(spark)
     events = load_table(spark, sf_dir, "events")
     dec = "decimal(28,6)"
     is_del = F.col("event_id") % 97 < 5

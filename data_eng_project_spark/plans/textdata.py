@@ -25,7 +25,6 @@ from data_eng_project_spark.operators import dedup as D
 from data_eng_project_spark.operators import similarity as S
 from data_eng_project_spark.operators import textops as T
 from data_eng_project_spark.plans.registry import register
-from data_eng_project_spark.session import prepare
 from data_eng_project_spark.tables import load_table, rebalance_if_unsplittable
 
 JACCARD_THRESHOLD = 0.5
@@ -66,7 +65,6 @@ _PRED_CASE = "CASE " + " ".join(
 def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stopword-marker language identification (n-gram heuristic): one
     codegen'd scan, no UDF."""
-    prepare(spark)
     return T.language_id(load_table(spark, sf_dir, "documents"))
 
 
@@ -100,7 +98,6 @@ def text_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     are the cost, so the scan is spread when its layout is unsplittable
     (r12: 0.41 -> 0.31 s min-of-5 at sf0.1; a multi-split lake skips the
     exchange entirely — tables.rebalance_if_unsplittable)."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     docs = rebalance_if_unsplittable(docs, sf_dir, "documents", spark, key="doc_id")
     return T.quality_score(docs)
@@ -119,7 +116,6 @@ def text_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 def token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting two ways: whitespace tokens and a BPE-ish regex
     segmentation (letters / digits / single punctuation)."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
@@ -142,7 +138,6 @@ def token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Normalized-content md5 fingerprint — the exact-dedup key."""
-    prepare(spark)
     return T.doc_fingerprint(load_table(spark, sf_dir, "documents"))
 
 
@@ -169,7 +164,6 @@ def corpus_clean_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composite training-corpus cleaning flow (language filter →
     quality filter → exact-dedup canonical → per-source stats), verified
     end-to-end against one SQL oracle — see pipelines/corpus.py."""
-    prepare(spark)
     from data_eng_project_spark.pipelines.corpus import clean_corpus, corpus_stats
 
     docs = load_table(spark, sf_dir, "documents")
@@ -206,7 +200,6 @@ def corpus_clean_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 def winnowing_fingerprints_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling-hash winnowing fingerprints (k=5 char grams, window w=4):
     per-doc selected-hash set summary. See operators/textops.py."""
-    prepare(spark)
     fps = T.winnowing_fingerprints(load_table(spark, sf_dir, "documents"))
     return fps.select(
         "doc_id",
@@ -232,7 +225,6 @@ def winnowing_fingerprints_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: content-hash groupBy, smallest id canonical."""
-    prepare(spark)
     return D.exact_dedup(load_table(spark, sf_dir, "documents"), "text", "doc_id")
 
 
@@ -352,7 +344,6 @@ _COMPONENT_CTES = """
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 3-gram-shingle Jaccard near-dup pairs via inverted-index
     self-join (no cross join: candidates only from shared shingles)."""
-    prepare(spark)
     return D.ngram_jaccard_pairs(
         load_table(spark, sf_dir, "documents"),
         "text",
@@ -392,7 +383,6 @@ def dedup_ngram_jaccard_collapsed(spark: SparkSession, sf_dir: str) -> DataFrame
     of k identical docs = k·(k−1)/2 true pairs no pruning can avoid;
     measured at the 100× replica probe, BASELINE.md round 7). Output
     carries both class sizes and the implied member-pair count."""
-    prepare(spark)
     return D.ngram_jaccard_pairs_collapsed(
         load_table(spark, sf_dir, "documents"),
         "text",
@@ -421,7 +411,6 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     which only an exact pair graph makes feasible. Consumes the STAGED
     pair graph (pipelines/staging.py): the iterative propagation
     re-scans a parquet pair list each round, not the similarity join."""
-    prepare(spark)
     from data_eng_project_spark.operators.clusters import dedup_cluster_assignments
     from data_eng_project_spark.pipelines.staging import near_dup_pairs
 
@@ -450,7 +439,6 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(64) + LSH(16 bands) candidate pairs, exact-Jaccard
     verified — the 100 TB-scale near-dup path."""
-    prepare(spark)
     return D.minhash_lsh_pairs(
         load_table(spark, sf_dir, "documents"),
         "text",
@@ -495,7 +483,6 @@ def dedup_minhash_lsh_collapsed(spark: SparkSession, sf_dir: str) -> DataFrame:
     production shape for duplicate-heavy lakes, where even the banded
     candidate join's quadratic OUTPUT term wins at scale (measured
     125.7 s at 100× dup-heavy vs 6.5 s collapsed; BASELINE.md round 9)."""
-    prepare(spark)
     return D.minhash_lsh_pairs_collapsed(
         load_table(spark, sf_dir, "documents"),
         "text",
@@ -545,7 +532,6 @@ def minhash_collapsed_accuracy_report(spark: SparkSession, sf_dir: str) -> DataF
     recall met the ≥0.99 sketch contract. One-pass full-outer TP/FN/FP
     classification (the minhash_accuracy_report idiom: three separate
     count actions re-ran the banded self-join three times)."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     exact = D.ngram_jaccard_pairs_collapsed(
         docs, "text", "doc_id", n=3, threshold=JACCARD_THRESHOLD
@@ -642,7 +628,6 @@ def _simhash_oracle_ctes(src: str = "documents") -> str:
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """64-bit SimHash near-dup pairs (Hamming ≤ 3) via quarter-band
     pigeonhole candidate join."""
-    prepare(spark)
     return D.simhash_pairs(load_table(spark, sf_dir, "documents"), "text", "doc_id")
 
 
@@ -679,7 +664,6 @@ def dedup_simhash_collapsed(spark: SparkSession, sf_dir: str) -> DataFrame:
     (byte-identical replicas share every band, so plain simhash_pairs
     carries the same quadratic within-class OUTPUT term the MinHash
     path measured at 100× dup-heavy; see operators/dedup.py)."""
-    prepare(spark)
     return D.simhash_pairs_collapsed(
         load_table(spark, sf_dir, "documents"), "text", "doc_id"
     )
@@ -711,7 +695,6 @@ def embedding_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-duplicate pairs: exact all-pairs cosine ≥ τ.
     Quadratic exact form (the oracle-checkable baseline); the LSH variant
     below is the scale path."""
-    prepare(spark)
     return S.all_pairs_above(
         load_table(spark, sf_dir, "embeddings"), threshold=COSINE_DUP_THRESHOLD
     )
@@ -735,7 +718,6 @@ def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k for a query vector (vec_id 0) — the exact
     ANN baseline. One scan + TakeOrdered; ties broken by vec_id on the
     rounded score."""
-    prepare(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     query = _query_vec_column(emb)
     return S.brute_force_topk(emb, query, k=10)
@@ -804,7 +786,6 @@ def similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-rank — the scale path for similarity search. Oracle-backed end to
     end (LCG hyperplane replay + band-membership arithmetic + exact
     cosine); recall vs brute force stays asserted in tests/."""
-    prepare(spark)
     return S.lsh_bucketed_pairs(
         load_table(spark, sf_dir, "embeddings"),
         threshold=COSINE_DUP_THRESHOLD,
@@ -824,7 +805,6 @@ def embedding_dup_pairs_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     (applyInPandas + BLAS) — same pairs as embedding_dup_pairs, ~100×
     the throughput on dense corpora; the operator you'd actually run at
     scale when exact (non-ANN) pairs are required."""
-    prepare(spark)
     return S.all_pairs_above_blocked(
         load_table(spark, sf_dir, "embeddings"), threshold=COSINE_DUP_THRESHOLD
     )
@@ -869,7 +849,6 @@ def embedding_dup_pairs_collapsed(spark: SparkSession, sf_dir: str) -> DataFrame
     aggregate on the vector value, GEMM over distinct vectors only,
     class sizes and the implied member-pair mass carried
     arithmetically."""
-    prepare(spark)
     return S.all_pairs_above_collapsed(
         load_table(spark, sf_dir, "embeddings"), threshold=COSINE_DUP_THRESHOLD
     )
@@ -891,7 +870,6 @@ def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate top-k: k-means coarse quantizer, probe the best
     clusters, exact cosine inside them — the other standard ANN scale
     path (scan ~n_probe/n_clusters of the corpus)."""
-    prepare(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     qvec = _query_vec_list(emb)
     return S.ivf_topk(emb, qvec, k=10, n_clusters=16, n_probe=4)
@@ -951,7 +929,6 @@ def ann_recall_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed query vectors, with the exact side fully oracle-recomputed
     and the recall contract graded as a boolean per method. Every ANN
     serving path in the engine now carries a measured contract."""
-    prepare(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     return S.ann_recall_report(
         emb,
@@ -1001,7 +978,6 @@ def tfidf_top_terms_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     analytics at all (its text handling is fixed-width slicing,
     dags/global_dag.py:96-138); this is the training-data-pipeline
     extension of the documents table."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     return T.tfidf_top_terms(docs)
 
@@ -1030,7 +1006,6 @@ def crossmodal_dup_consensus(spark: SparkSession, sf_dir: str) -> DataFrame:
     relative to the corpus, so the two embedding attachments are
     fact-to-fact equi-joins on id that AQE resolves as broadcasts of the
     pair side — never a second all-pairs pass over vectors."""
-    prepare(spark)
     from data_eng_project_spark.pipelines.staging import near_dup_pairs
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1103,7 +1078,6 @@ def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     The per-term tf columns come from conditional aggregation — the
     query never re-scans or re-shuffles per query term (at 100 TB each
     extra term is one more conditional agg column, not another join)."""
-    prepare(spark)
     terms = ["spark", "merge", "window"]
     docs = load_table(spark, sf_dir, "documents")
     scored = _bm25_scored_frame(docs, terms)
@@ -1140,7 +1114,6 @@ def label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors through one combiner. Components sum in decimal (order-free,
     exact) via an explicit float→double→decimal cast chain shared with
     the oracle; mean lands in double."""
-    prepare(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     return (
         emb.select("label", F.posexplode("embedding").alias("pos", "v"))
@@ -1226,7 +1199,6 @@ def hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     attach vectors, a one-row bounds broadcast, TakeOrdered top-k —
     at 100 TB the cosine re-rank runs only on documents, never a second
     all-pairs pass."""
-    prepare(spark)
     terms = ["spark", "merge", "window"]
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1303,7 +1275,6 @@ def duplicate_span_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/dedup.duplicate_span_pairs for the fan-out bound). The
     oracle recomputes spans as strings; ours joins on xxhash64 span
     keys — identical pair sets absent a 64-bit collision."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     return D.duplicate_span_pairs(
         docs, window=_SPAN_W, max_df=_SPAN_MAX_DF
@@ -1327,7 +1298,6 @@ def semdedup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup semantic deduplication: k-means coarse clusters, exact
     within-cluster cosine, keep-lowest-id policy (see
     operators/similarity.semdedup for the linear-total-work argument)."""
-    prepare(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     return S.semdedup(emb, n_clusters=16, threshold=COSINE_DUP_THRESHOLD)
 
@@ -1385,7 +1355,6 @@ def semdedup_accuracy_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     permanently rows-only semdedup family from "trust the pytest" into
     a measured, driver-graded accuracy contract (the
     ann_recall_report / minhash_accuracy_report pattern)."""
-    prepare(spark)
     # Fixed-size audit sample (see the oracle note): semdedup AND the
     # exact truth both run on the 10k smallest ids, so the report's
     # cost is corpus-size-insensitive while the subset invariant and
@@ -1444,7 +1413,6 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     (source='src1') documents against the existing corpus ONLY —
     bipartite PPJoin, never corpus×corpus (see
     operators/dedup.ngram_jaccard_pairs_bipartite)."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     return D.ngram_jaccard_pairs_bipartite(
         docs.filter(F.col("source") != _INCR_BATCH_SOURCE),
@@ -1513,7 +1481,6 @@ def kmv_distinct_ngrams_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch family member whose ESTIMATE carries a cross-engine oracle —
     md5 ordering and the (k−1)/U_(k) estimator are engine-independent
     (see operators/textops.kmv_distinct_ngrams)."""
-    prepare(spark)
     return T.kmv_distinct_ngrams(
         load_table(spark, sf_dir, "documents"), n=3, k=_KMV_K
     )
@@ -1543,8 +1510,6 @@ def langid_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-true-language share. The matrix is languages² rows — the window
     runs over an already-aggregated tiny frame, so the only real shuffle
     is the count aggregate."""
-    prepare(spark)
-
     docs = load_table(spark, sf_dir, "documents")
     preds = T.language_id(docs).select("doc_id", "lang_pred")
     truth = docs.select("doc_id", F.col("lang").alias("lang_true"))
@@ -1595,7 +1560,6 @@ def curation_funnel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ablation table a curator reads to see which stage costs which source
     how much. One scan + conditional aggregates; the canonical flag is a
     broadcast-able left join against the md5-group minima."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     preds = T.language_id(docs).select("doc_id", "lang_pred")
     canon = docs.groupBy(F.md5("text").alias("_h")).agg(
@@ -1705,7 +1669,6 @@ def kmv_source_similarity_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     in both), with the exact Jaccard as the measuring stick — both
     bit-reproducible (md5-ordered), see
     operators/textops.kmv_source_similarity."""
-    prepare(spark)
     return T.kmv_source_similarity(
         load_table(spark, sf_dir, "documents"), n=3, k=_KMV_K
     )
@@ -1729,7 +1692,6 @@ def similarity_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector to m·nbits bits; query-time ADC scores are m table lookups
     per vector, exact cosine re-ranks the shortlist — the memory-bound
     scale path (billion-vector indexes live in RAM as codes)."""
-    prepare(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     qvec = _query_vec_list(emb)
     return S.pq_topk(emb, qvec, k=10, m=4, nbits=4)
@@ -1762,7 +1724,6 @@ def composed_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     composition (same stages, same Catalyst program shape)."""
     from data_eng_project_spark.pipelines.composer import compose
 
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     cleaned = compose(
         docs,
@@ -1795,7 +1756,6 @@ def similarity_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ composite ANN: coarse probe prunes the corpus, ADC scores
     codes, exact cosine re-ranks — the billion-vector memory+scan
     shape (see operators/similarity.ivf_pq_topk)."""
-    prepare(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     qvec = _query_vec_list(emb)
     return S.ivf_pq_topk(emb, qvec, k=10, n_clusters=16, n_probe=4, m=4, nbits=4)
@@ -1876,7 +1836,6 @@ def multimodal_audio_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
         extract_audio_spectrum,
     )
 
-    prepare(spark)
     docs = (
         load_table(spark, sf_dir, "documents")
         .select("doc_id")
@@ -1941,7 +1900,6 @@ def cms_term_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-20 terms — md5-bucketed, so the sketch cells and estimates are
     bit-reproducible cross-engine (see
     operators/textops.cms_term_count_estimates)."""
-    prepare(spark)
     return T.cms_term_count_estimates(
         load_table(spark, sf_dir, "documents"),
         depth=_CMS_D,
@@ -1989,7 +1947,6 @@ def doc_novelty_scores_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exclusive-shingle novelty ratio per document (df=1 share) — the
     memorization/boilerplate signal, from the same inverted index as the
     dedup family (see operators/dedup.doc_novelty_scores)."""
-    prepare(spark)
     return D.doc_novelty_scores(load_table(spark, sf_dir, "documents"))
 
 
@@ -2027,7 +1984,6 @@ def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     all_pairs_above_blocked's applyInPandas shape) with one pass and no
     row blow-up — the eigendecomposition of the dim×dim result is then
     driver-side linear algebra on a tiny matrix."""
-    prepare(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     x = emb.select(
         "vec_id",
@@ -2098,7 +2054,6 @@ def feature_hash_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vocabulary-free hashing-trick doc vectors in sparse form — exact
     integer weights from md5 bucket+sign hashing, so the featurizer
     itself is oracle-checked (see operators/textops.feature_hash_doc_vectors)."""
-    prepare(spark)
     return T.feature_hash_doc_vectors(
         load_table(spark, sf_dir, "documents"), dim=_FH_DIM
     )
@@ -2129,7 +2084,6 @@ def phrase_search_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
     token list — so agreement certifies the semantics, not a mirrored
     query plan. Postings-list join cost ∝ the phrase tokens' document
     frequency, never the corpus."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     return T.phrase_occurrences(docs, ("order", "fast"))
 
@@ -2263,7 +2217,6 @@ def rrf_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     fusion ranks come from operators/datasetops.distributed_order_rank
     (descending images) — no partitionless window in the plan at any
     candidate-set size; the top-10 compiles to TakeOrdered."""
-    prepare(spark)
     from data_eng_project_spark.operators.datasetops import distributed_order_rank
 
     docs = load_table(spark, sf_dir, "documents")
@@ -2375,7 +2328,6 @@ def minhash_band_planning(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one exact-pairs computation (candidates track the answer, see
     ngram_jaccard_pairs) + a |configs|×|buckets| aggregate; the config
     fan-out multiplies the PAIR table (answer-sized), never the corpus."""
-    prepare(spark)
     pairs = D.ngram_jaccard_pairs(
         load_table(spark, sf_dir, "documents"),
         "text",
@@ -2493,7 +2445,6 @@ def label_centroid_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines. Shape: one (label, dim)-keyed aggregate over the corpus,
     then a |labels|²×dim pair join over the dimension-sized centroid
     table — the heavy pass never exceeds one shuffle."""
-    prepare(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     dec = "decimal(38,12)"
     cent = (

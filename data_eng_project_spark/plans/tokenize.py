@@ -23,7 +23,6 @@ from data_eng_project_spark.operators.tokenizer import (
     word_frequencies,
 )
 from data_eng_project_spark.plans.registry import register
-from data_eng_project_spark.session import prepare
 from data_eng_project_spark.tables import load_table
 
 
@@ -61,7 +60,6 @@ def bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed corpus-wide in DataFrame algebra and certified against the
     SQL twin. The greedy fit (operators/tokenizer.bpe_fit) consumes
     exactly this statistic in its first merge round."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     return (
         adjacent_pair_counts(docs)
@@ -90,7 +88,6 @@ def bpe_word_frequencies(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-100 rows of the word-frequency table the driver-side BPE fit
     collects — certifying the distributed half of fitting (the collect
     cap is deterministic: freq desc, word asc)."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     return (
         word_frequencies(docs)
@@ -116,7 +113,6 @@ def bpe_encode_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     memoized word→pieces): per-doc subword counts, compression, and
     OOV-pressure. Deterministic end-to-end (tie-breaks are total in both
     the fit and the stats)."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     merges = bpe_fit_distributed(docs, n_merges=200, max_words=20000)
     return bpe_encode_stats(docs, merges).orderBy("doc_id")
@@ -151,7 +147,6 @@ def bpe_roundtrip_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     encoder: every word of every document must reconstruct exactly from
     its encoded pieces (see operators/tokenizer.bpe_roundtrip_report) —
     the graded-accuracy companion to the rows-only encode-stats query."""
-    prepare(spark)
     from data_eng_project_spark.operators.tokenizer import bpe_roundtrip_report
 
     docs = load_table(spark, sf_dir, "documents")

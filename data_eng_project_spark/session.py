@@ -7,12 +7,14 @@ Two concerns live here:
 
 2. ``prepare`` — *runtime* conf hygiene applied to any externally-provided
    session (the verify driver constructs its own ``SparkSession`` and hands
-   it to ``__spark_entry__``).  Everything set here must be a runtime-settable
-   SQL conf.  Most important is ``spark.sql.ansi.enabled=false``: the
-   reference's scalar semantics are "NULL on failure, never error"
-   (reference ``dags/global_dag.py:111-118`` — try/except-to-None date
-   parsing), so the engine pins non-ANSI evaluation rather than relying on
-   whoever built the session.
+   it to ``__spark_entry__``).  It runs in two places: ``get_session``, and
+   the wrapper ``plans.registry.register`` puts around every query, so each
+   query call re-applies it to whatever session it is given.  Everything
+   set here must be a runtime-settable SQL conf.  Most important is
+   ``spark.sql.ansi.enabled=false``: the reference's scalar semantics are
+   "NULL on failure, never error" (reference ``dags/global_dag.py:111-118``
+   — try/except-to-None date parsing), so the engine pins non-ANSI
+   evaluation rather than relying on whoever built the session.
 """
 
 from __future__ import annotations

@@ -51,9 +51,6 @@ def read_bounded_parquet_stream(
     single-file glob handling can never drift between them)."""
     import os
 
-    from data_eng_project_spark.session import prepare
-
-    prepare(spark)
     raw_schema = spark.read.parquet(parquet_path).schema
     reader = spark.readStream.schema(raw_schema)
     if os.path.isdir(parquet_path):

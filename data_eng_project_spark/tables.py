@@ -36,9 +36,6 @@ def table_path(sf_dir: str, name: str) -> str:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from data_eng_project_spark.session import prepare
-
-    prepare(spark)
     df = spark.read.parquet(table_path(sf_dir, name))
     if name == "events":
         # The generator has stored ts two ways across rounds:

@@ -922,26 +922,19 @@ def test_unigram_lm_scores_quantile_mode(spark):
     assert rows[9].lm_keep is False  # token-less
 
 
-def test_release_dedup_caches_unpersists(spark, near_dup_docs):
-    """Jaccard operators persist shingle-set frames; release_dedup_caches
-    must drop every tracked cache (long-lived incremental sessions)."""
-    from data_eng_project_spark.operators.dedup import (
-        _PERSISTED,
-        ngram_jaccard_pairs_bipartite,
-        release_dedup_caches,
-    )
+def test_clear_cache_releases_dedup_caches(spark, near_dup_docs):
+    """Jaccard operators persist their shingle-set frames; the runner's
+    ``clearCache()`` after each op is what releases them, so a long-lived
+    session's CacheManager is empty between ops."""
+    from data_eng_project_spark.operators.dedup import ngram_jaccard_pairs_bipartite
 
-    release_dedup_caches()  # clean slate from earlier tests in the session
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
     batch = near_dup_docs.filter(F.col("doc_id") >= 3)
     corpus = near_dup_docs.filter(F.col("doc_id") < 3)
     ngram_jaccard_pairs_bipartite(corpus, batch, "text", "doc_id").collect()
-    # corpus sets + batch sets + the shared prefix frame (r12: persisted
-    # so pa/pb stop re-running the union+freq+rank chain twice)
-    assert len(_PERSISTED) == 3
-    cached = list(_PERSISTED)
-    release_dedup_caches()
-    assert not _PERSISTED
-    assert all(d.storageLevel.useMemory is False for d in cached)
+    assert not cache_manager.isEmpty()
+    spark.catalog.clearCache()
+    assert cache_manager.isEmpty()
 
 
 def test_decode_frame_png_stream():

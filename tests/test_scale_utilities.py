@@ -350,6 +350,34 @@ def test_prepare_restores_arrow_batch_default(spark):
     )
 
 
+def test_registry_prepares_every_query(spark, sf_dir):
+    """The registry wraps every query in ``session.prepare``: a query
+    called through the driver surface on a session whose confs drifted
+    (the driver's vanilla ANSI-on, host-TZ session; a media query's
+    lowered Arrow cap) runs with the engine's runtime confs restored."""
+    import __spark_entry__
+    from data_eng_project_spark.plans import REGISTRY
+    from data_eng_project_spark.session import _RUNTIME_CONFS
+
+    assert all(hasattr(spec.fn, "__wrapped__") for spec in REGISTRY.values())
+    drifted = {
+        "spark.sql.ansi.enabled": "true",
+        "spark.sql.session.timeZone": "America/New_York",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "7",
+    }
+    saved = {k: spark.conf.get(k) for k in drifted}
+    try:
+        for k, v in drifted.items():
+            spark.conf.set(k, v)
+        __spark_entry__.queries()["q1_pricing_summary"](spark, sf_dir)
+        assert {k: spark.conf.get(k) for k in drifted} == {
+            k: _RUNTIME_CONFS[k] for k in drifted
+        }
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
 def test_compact_parquet_handles_map_columns(spark, tmp_path):
     """Regression (r5 review): the sized-compaction salt is xxhash64 of
     the data columns, but Spark's hash functions reject MapType — a

@@ -65,7 +65,7 @@ def main() -> None:
         if not spec.headline:
             continue
         try:
-            df = spec.fn(spark, SF)  # prepare() inside re-enables AQE...
+            df = spec.fn(spark, SF)  # the registry's prepare() re-enables AQE...
             spark.conf.set("spark.sql.adaptive.enabled", "false")  # ...undo
             plan = df._jdf.queryExecution().executedPlan().toString()
             plan = _dedup_cached_subtrees(plan)

@@ -12,7 +12,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from data_eng_project_spark.plans import REGISTRY, _ROWS_ONLY_SLOTS  # noqa: E402
+from data_eng_project_spark.plans import REGISTRY  # noqa: E402
 
 # Why each rows-only query is PERMANENTLY rows-only (not a conversion
 # backlog): registry oracles are static ANSI SQL that must hold at EVERY
@@ -70,10 +70,7 @@ _ROWS_ONLY_RATIONALE = {
 
 def main() -> None:
     # The rationale table must track the REGISTRY's actual rows-only
-    # set (oracle is None), not the per-round window allowlist
-    # (_ROWS_ONLY_SLOTS) — the window allowlist is empty in rounds
-    # whose graded window is all-oracle, while the rationale for the
-    # permanently rows-only queries stands regardless of rotation.
+    # set (oracle is None).
     rows_only = {n for n, s in REGISTRY.items() if s.oracle is None}
     missing = rows_only - set(_ROWS_ONLY_RATIONALE)
     extra = set(_ROWS_ONLY_RATIONALE) - rows_only
@@ -81,9 +78,6 @@ def main() -> None:
         raise SystemExit(
             f"rows-only rationale out of sync: missing={missing} extra={extra}"
         )
-    stray = set(_ROWS_ONLY_SLOTS) - rows_only
-    if stray:
-        raise SystemExit(f"window rows-only slots that HAVE oracles: {stray}")
     lines = [
         "# Query index (generated by tools/gen_query_index.py)",
         "",
