@@ -66,17 +66,8 @@ def md5_full_bucket_int(col: Column | str) -> Column:
     """The un-modulused md5 bucket integer: first 8 hex digits of
     md5(string(col)) as a BIGINT in [0, 2^32) — the uniform-u source
     for priority sampling (u = (h+1)/2^32) and any consumer that needs
-    the raw hash value rather than a bucket. Mirrors byte-for-byte in
-    DuckDB via ``md5_full_bucket_int_sql``."""
+    the raw hash value rather than a bucket."""
     c = F.col(col) if isinstance(col, str) else col
     return F.conv(F.substring(F.md5(c.cast("string")), 1, 8), 16, 10).cast(
         "bigint"
-    )
-
-
-def md5_full_bucket_int_sql(expr: str) -> str:
-    """The DuckDB mirror of ``md5_full_bucket_int`` for oracle SQL."""
-    return (
-        f"CAST(concat('0x', substr(md5(CAST({expr} AS VARCHAR)), 1, 8)) "
-        "AS BIGINT)"
     )

@@ -1081,7 +1081,7 @@ def split_column(
     keeps sign so negative ids would all fall in 'train'. The md5
     bucket is uniform and sign-safe for any 64-bit id, and mirrors
     byte-for-byte in the DuckDB oracle
-    (``plans/curation3._SPLIT_CASE``).
+    (``plans/textdata._SPLIT_CASE``).
     """
     from data_eng_project_spark.functions.hashing import md5_bucket
 

@@ -457,9 +457,9 @@ def collapse_exact_text_classes(
     Cost note (r13): min over a STRUCT is not hash-aggregable, so this
     compiles to Sort→SortAggregate on both sides of its exchange with
     the full text flowing through — fine for the ONE place the
-    representative text is needed (the similarity join's input), which
-    is why consumers that only need (rep id, class size) use
-    collapse_class_sizes below instead of re-running this.
+    representative text is needed (the similarity join's input). The
+    collapsed variants carry n_docs from here through their persisted
+    sets/fingerprint cache (carry_cols) instead of re-running this.
 
     Returns (id, text, n_docs) — one row per distinct content class."""
     return (
@@ -473,36 +473,6 @@ def collapse_exact_text_classes(
             F.col(f"_r.{text_col}").alias(text_col),
             "n_docs",
         )
-    )
-
-
-def collapse_class_sizes(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """(id, n_docs) per exact-duplicate class, id = the class's smallest
-    member id — exactly the representative collapse_exact_text_classes
-    elects (its min(struct(id, text)) is ordered by the unique id first,
-    so min(struct).id == min(id) over the same grouping).
-
-    The point of the separate formulation (r13, VERDICT r12 #2): class-
-    size attachment does NOT need the representative's text, and the
-    struct-min aggregate that carries it is the expensive shape — not
-    hash-aggregable (Sort→SortAggregate over the full corpus text, both
-    sides of the exchange). min(id)+count IS hash-aggregable and its
-    exchange moves (16-byte fp, 8-byte id) metadata instead of document
-    text — the §8 "decide with small rows" split. The r12 plan executed
-    the full struct-min chain once per _attach_class_sizes join (twice
-    per collapsed query) beyond the cached copy the similarity join
-    reads. The collapsed queries have since gone one step further and
-    carry n_docs through their one persisted sets/fingerprint cache
-    (carry_cols — no corpus re-scan at all), so this helper is the
-    standalone formulation for callers that need class sizes without
-    building shingle sets."""
-    return (
-        df.groupBy(_normalized_content_fp(text_col).alias("_fp"))
-        .agg(
-            F.min(F.col(id_col)).alias(id_col),
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        )
-        .select(id_col, "n_docs")
     )
 
 

@@ -240,46 +240,6 @@ def _swap_directories(path: str, tmp: str) -> None:
     shutil.rmtree(bak)
 
 
-def compact_parquet(
-    spark: SparkSession, path: str, target_file_mb: int = 128
-) -> tuple[int, int]:
-    """Small-file compaction: rewrite a parquet directory into
-    ~target_file_mb files. Streaming/incremental sinks accrete small
-    files (every micro-batch appends a few); scans then pay per-file
-    open/footer costs and lose row-group-sized reads — at 100 TB the
-    small-file problem IS the read-performance problem. Returns
-    (files_before, files_after).
-
-    Hive-partitioned layouts are preserved AND size-bounded: partition
-    columns are rediscovered from the directory chain, per-partition-value
-    byte sizes are measured from the files on disk, and the rewrite
-    repartitions on (partition cols, salt) where each value's salt
-    cardinality is ceil(partition_bytes / target_file_mb) — so a skewed
-    partition value splits into ~target-sized files instead of
-    re-accreting into a single multi-GB file that defeats the
-    compaction's read-size goal (ADVICE r4), while pruning is untouched.
-    Crash posture: see _swap_directories — no point in the rewrite
-    deletes data before its replacement is complete.
-    """
-    import math
-
-    from pyspark.sql import functions as F
-
-    files_before = _parquet_files_recursive(path)
-    total_bytes = sum(os.path.getsize(f) for f in files_before)
-    target_bytes = target_file_mb * 1024 * 1024
-    n_out = max(1, math.ceil(total_bytes / target_bytes))
-    part_cols = _partition_columns(path)
-    df = spark.read.parquet(path)
-    tmp = path.rstrip("/") + "__compacting"
-    if part_cols:
-        _rewrite_partitioned_sized(df, path, tmp, part_cols, files_before, target_bytes)
-    else:
-        df.coalesce(n_out).write.mode("overwrite").parquet(tmp)
-    _swap_directories(path, tmp)
-    return len(files_before), len(_parquet_files_recursive(path))
-
-
 def _rewrite_partitioned_sized(
     df: DataFrame,
     path: str,
@@ -478,15 +438,28 @@ def optimize_table(
     target_file_mb: int = 128,
     num_files: int | None = None,
 ) -> tuple[int, int]:
-    """Table-maintenance composite (the OPTIMIZE [ZORDER BY] job): fold
-    accreted small files back to ~target size and, when two cluster
+    """Table maintenance (the OPTIMIZE [ZORDER BY] job): rewrite a
+    parquet directory into ~target_file_mb files and, when two cluster
     columns are given, lay the rewrite out Z-ordered so footer min/max
-    prune on either column. One read + one write; returns
-    (files_before, files_after). Same crash posture as compact_parquet
-    (_swap_directories: original preserved until the rewrite is fully
-    in place). Hive-partitioned layouts preserve their partitioning
-    (and ignore zorder_cols — Z-ordering within partitions is a
-    per-partition job, not a flatten)."""
+    prune on either column. Streaming/incremental sinks accrete small
+    files (every micro-batch appends a few); scans then pay per-file
+    open/footer costs and lose row-group-sized reads — at 100 TB the
+    small-file problem IS the read-performance problem. One read + one
+    write; returns (files_before, files_after). ``num_files`` overrides
+    the size-derived file count of an unpartitioned rewrite.
+
+    Hive-partitioned layouts are preserved AND size-bounded (and ignore
+    zorder_cols — Z-ordering within partitions is a per-partition job,
+    not a flatten): partition columns are rediscovered from the
+    directory chain, per-partition-value byte sizes are measured from
+    the files on disk, and the rewrite repartitions on (partition cols,
+    salt) where each value's salt cardinality is
+    ceil(partition_bytes / target_file_mb) — so a skewed partition value
+    splits into ~target-sized files instead of re-accreting into a
+    single multi-GB file that defeats the read-size goal, while pruning
+    is untouched. Crash posture: see _swap_directories — no point in the
+    rewrite deletes data before its replacement is complete.
+    """
     import math
 
     files_before = _parquet_files_recursive(path)

@@ -18,20 +18,15 @@ from data_eng_project_spark.plans.registry import REGISTRY, QuerySpec, register 
 
 # Importing the modules populates REGISTRY.
 from data_eng_project_spark.plans import analytics  # noqa: E402,F401
-from data_eng_project_spark.plans import analytics2  # noqa: E402,F401
-from data_eng_project_spark.plans import analytics3  # noqa: E402,F401
-from data_eng_project_spark.plans import analytics4  # noqa: E402,F401
-from data_eng_project_spark.plans import analytics5  # noqa: E402,F401
 from data_eng_project_spark.plans import curation  # noqa: E402,F401
-from data_eng_project_spark.plans import curation2  # noqa: E402,F401
-from data_eng_project_spark.plans import curation3  # noqa: E402,F401
 from data_eng_project_spark.plans import datasetops  # noqa: E402,F401
-from data_eng_project_spark.plans import extensions  # noqa: E402,F401
 from data_eng_project_spark.plans import flagship  # noqa: E402,F401
 from data_eng_project_spark.plans import layout  # noqa: E402,F401
 from data_eng_project_spark.plans import linalg  # noqa: E402,F401
+from data_eng_project_spark.plans import multimodal  # noqa: E402,F401
 from data_eng_project_spark.plans import parity  # noqa: E402,F401
 from data_eng_project_spark.plans import privacy  # noqa: E402,F401
+from data_eng_project_spark.plans import streaming  # noqa: E402,F401
 from data_eng_project_spark.plans import temporal  # noqa: E402,F401
 from data_eng_project_spark.plans import textdata  # noqa: E402,F401
 from data_eng_project_spark.plans import tokenize  # noqa: E402,F401

@@ -119,3 +119,35 @@ def flagship_site_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs.groupBy("s_suppkey", "s_name").agg(
         F.count(F.lit(1)).alias("n_points_nearby")
     )
+
+
+@register(
+    "flagship_density_power_corr",
+    oracle=f"""
+        WITH pairs AS (
+            SELECT s.s_suppkey,
+                   CAST((s.s_suppkey * 97) % 1000 + 200 AS DOUBLE) AS site_power,
+                   count(*) AS n_points
+            FROM ({_POINTS_SQL}) p
+            CROSS JOIN ({_SITES_SQL}) s
+            WHERE {_DIST_SQL} <= {RADIUS_KM}
+            GROUP BY s.s_suppkey
+        )
+        SELECT round(corr(n_points, site_power), 6) AS density_power_corr,
+               count(*) AS n_sites
+        FROM pairs
+    """,
+    tags=("flagship", "A3", "corr"),
+)
+def flagship_density_power_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The reference's intended correlation (A3): proximity density vs a
+    derived site-power attribute — df.stat-style corr as a query."""
+    pairs = near_join(_points(spark, sf_dir), _sites(spark, sf_dir), radius_km=RADIUS_KM)
+    per_site = pairs.groupBy("s_suppkey").agg(F.count(F.lit(1)).alias("n_points"))
+    per_site = per_site.withColumn(
+        "site_power", ((F.col("s_suppkey") * 97) % 1000 + 200).cast("double")
+    )
+    return per_site.agg(
+        F.round(F.corr("n_points", "site_power"), 6).alias("density_power_corr"),
+        F.count(F.lit(1)).alias("n_sites"),
+    )

@@ -1,6 +1,6 @@
 """Privacy-preserving release plans: k-anonymity generalization ladder.
 
-Complements the PII detect/redact stage (plans/curation2.py) with the
+Complements the PII detect/redact stage (plans/curation.py) with the
 aggregate-release side of privacy: before publishing per-segment
 statistics out of a 100 TB lake, small groups must be generalized or
 suppressed so no quasi-identifier combination isolates < k individuals

@@ -1,5 +1,7 @@
-"""Training-data pipeline queries: text analysis, deduplication,
-similarity search over the documents/embeddings tables. These are the
+"""Training-data pipeline queries over the documents/embeddings tables:
+text analysis and corpus statistics, deduplication, similarity search,
+hard-negative mining, and the composed corpus and dataset-release
+pipelines (whose split helpers plans/curation.py shares). These are the
 "beyond the reference" operators (BASELINE.json north star) — first-class
 components graded alongside the reference-parity surface.
 
@@ -24,6 +26,8 @@ from data_eng_project_spark.functions.text import (
 from data_eng_project_spark.operators import dedup as D
 from data_eng_project_spark.operators import similarity as S
 from data_eng_project_spark.operators import textops as T
+from data_eng_project_spark.operators.curation import top_bigrams_by_source
+from data_eng_project_spark.plans.registry import REGISTRY as _REG
 from data_eng_project_spark.plans.registry import register
 from data_eng_project_spark.tables import load_table, rebalance_if_unsplittable
 
@@ -2482,4 +2486,299 @@ def label_centroid_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             + F.lit(0.0)
         ).alias("cosine"),
+    )
+
+
+_TOP_BIGRAMS_K = 10
+
+
+@register(
+    "bigram_top_terms",
+    oracle=f"""
+        WITH t AS (
+            SELECT source,
+                   list_filter(string_split_regex(lower(text), '[^a-z]+'),
+                               x -> x <> '') AS toks
+            FROM documents
+        ), bg AS (
+            SELECT source,
+                   unnest(list_transform(range(1, len(toks)),
+                                         i -> toks[i] || ' ' || toks[i+1]))
+                       AS bigram
+            FROM t WHERE len(toks) >= 2
+        ), c AS (
+            SELECT source, bigram, count(*) AS n FROM bg GROUP BY source, bigram
+        )
+        SELECT source, bigram, n, rk FROM (
+            SELECT source, bigram, n,
+                   CAST(row_number() OVER (
+                       PARTITION BY source ORDER BY n DESC, bigram
+                   ) AS BIGINT) AS rk
+            FROM c
+        ) WHERE rk <= {_TOP_BIGRAMS_K}
+    """,
+    tags=("textdata", "ngram", "corpus-stats"),
+)
+def bigram_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-k adjacent word bigrams per source (count desc, lexicographic
+    tie-break) — boilerplate detection / corpus fingerprinting stats.
+    Bigrams are built by array transform (no window, no self-join); the
+    only shuffle is the word-count-shaped (source, bigram) aggregate."""
+    docs = load_table(spark, sf_dir, "documents")
+    return top_bigrams_by_source(docs, k=_TOP_BIGRAMS_K)
+
+
+_TRAIN_PCT = 80
+_VAL_PCT = 10
+
+
+def _split_case_sql() -> str:
+    """The DuckDB mirror of operators/curation.split_column, DERIVED
+    from the same constants and the shared md5-bucket SQL so the five
+    oracles interpolating it can never desync from the Spark side when
+    _TRAIN_PCT/_VAL_PCT or the bucket hash change."""
+    from data_eng_project_spark.functions.hashing import md5_bucket_sql
+
+    b = md5_bucket_sql("{id}", 100)
+    return f"""
+    CASE WHEN {b} < {_TRAIN_PCT} THEN 'train'
+         WHEN {b} < {_TRAIN_PCT + _VAL_PCT} THEN 'val'
+         ELSE 'test' END
+"""
+
+
+_SPLIT_CASE = _split_case_sql()
+
+
+@register(
+    "hard_negative_mining",
+    oracle="""
+        WITH p AS (
+            SELECT a.vec_id AS qid, b.vec_id AS cid,
+                   a.label AS label_q, b.label AS label_c,
+                   round(list_cosine_similarity(
+                       CAST(a.embedding AS DOUBLE[]),
+                       CAST(b.embedding AS DOUBLE[])), 6) AS cosine
+            FROM embeddings a
+            JOIN embeddings b ON a.label <> b.label
+        ), r AS (
+            SELECT qid, cid, label_q, label_c, cosine,
+                   row_number() OVER (
+                       PARTITION BY qid ORDER BY cosine DESC, cid
+                   ) AS rank
+            FROM p
+        )
+        SELECT qid, cid, label_q, label_c, cosine,
+               CAST(rank AS BIGINT) AS rank
+        FROM r WHERE rank <= 3
+    """,
+    tags=("similarity", "contrastive", "mining"),
+)
+def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Contrastive-training hard negatives: per vector, the 3 most
+    similar different-label vectors (rounded-cosine ranking, id
+    tie-break — bit-stable across engines). Exact baseline; the GEMM
+    blocked k-NN join is the documented scale path."""
+    from data_eng_project_spark.operators.similarity import hard_negative_topk
+
+    return hard_negative_topk(load_table(spark, sf_dir, "embeddings"), k=3)
+
+
+def _clean_ngram_ctes() -> str:
+    """The shared n-gram-pair CTE chain retargeted at the `clean` CTE
+    (the pair graph must be computed over the *cleaned* corpus, not the
+    raw table — dedup after filtering is the release order)."""
+    return _NGRAM_CTES.replace("FROM documents", "FROM clean")
+
+
+@register(
+    "dataset_release_pipeline",
+    oracle=None,  # assembled in _release_oracle() below (needs the
+    # textdata language CASE; registered via REGISTRY patch right after)
+    tags=("pipeline", "composite", "release"),
+)
+def dataset_release_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The full dataset-release chain as ONE declarative config —
+    language filter → min-length → exact dedup → near-dup canonical
+    keep → deterministic split tag — folded by pipelines/composer into
+    a single lazy plan, reported as the per-(split, source) release
+    table. The oracle replays every stage in SQL (recursive transitive
+    closure for the dup components), so the whole chained semantics is
+    bit-certified, not just each stage in isolation."""
+    from data_eng_project_spark.pipelines.composer import compose
+    from data_eng_project_spark.functions.text import tokens as _tokens
+
+    docs = load_table(spark, sf_dir, "documents")
+    released = compose(
+        docs,
+        [
+            {"stage": "lang_filter", "lang": "en"},
+            {"stage": "min_words", "n": 20},
+            {"stage": "dedup_exact"},
+            # near-dup pairs come from the staged corpus pair graph,
+            # restricted to survivors of the upstream filters — equal to
+            # recomputing on the subset (Jaccard is pairwise) but without
+            # a second corpus-scale similarity join.
+            {"stage": "near_dedup", "n": 3, "threshold": 0.5,
+             "staged_corpus_dir": sf_dir},
+            {"stage": "split_tag", "train_pct": _TRAIN_PCT, "val_pct": _VAL_PCT},
+        ],
+    )
+    toks = F.filter(_tokens("text"), lambda x: x != F.lit(""))
+    return released.groupBy("split", "source").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+        F.sum(F.size(toks)).cast("bigint").alias("n_tokens"),
+    )
+
+
+def _release_oracle() -> str:
+    return f"""
+        WITH RECURSIVE canon AS (
+            SELECT min(doc_id) AS keep_id FROM documents GROUP BY md5(text)
+        ), feat AS (
+            SELECT doc_id,
+                   {_PRED_CASE} AS lang_pred,
+                   len(string_split_regex(trim(text), '\\s+')) AS n_words
+            FROM documents
+        ), clean AS (
+            SELECT d.doc_id, d.source, d.text
+            FROM documents d
+            JOIN canon ON d.doc_id = canon.keep_id
+            JOIN feat ON feat.doc_id = d.doc_id
+            WHERE feat.lang_pred = 'en' AND feat.n_words >= 20
+        ), {_clean_ngram_ctes()},{_COMPONENT_CTES},
+        comp AS (
+            SELECT src AS doc_id, least(src, min(dst)) AS component
+            FROM reach GROUP BY src
+        ),
+        kept AS (
+            SELECT c.doc_id, c.source, c.text
+            FROM clean c
+            LEFT JOIN comp ON comp.doc_id = c.doc_id
+            WHERE comp.doc_id IS NULL OR comp.component = c.doc_id
+        )
+        SELECT {_SPLIT_CASE.format(id="doc_id")} AS split,
+               source,
+               CAST(count(*) AS BIGINT) AS n_docs,
+               CAST(sum(len(list_filter(
+                   string_split_regex(trim(text), '\\s+'),
+                   x -> x <> ''))) AS BIGINT) AS n_tokens
+        FROM kept
+        GROUP BY 1, 2
+    """
+
+
+_REG["dataset_release_pipeline"].oracle = _release_oracle()
+
+
+@register(
+    "hard_negative_mining_blocked",
+    oracle="""
+        WITH p AS (
+            SELECT a.vec_id AS qid, b.vec_id AS cid,
+                   round(list_cosine_similarity(
+                       CAST(a.embedding AS DOUBLE[]),
+                       CAST(b.embedding AS DOUBLE[])), 6) AS cosine
+            FROM embeddings a
+            JOIN embeddings b ON a.label <> b.label
+        ), r AS (
+            SELECT qid, cid, cosine,
+                   row_number() OVER (
+                       PARTITION BY qid ORDER BY cosine DESC, cid
+                   ) AS rank
+            FROM p
+        )
+        SELECT qid, cid, cosine, CAST(rank AS BIGINT) AS rank
+        FROM r WHERE rank <= 3
+    """,
+    tags=("similarity", "contrastive", "mining", "scale-path"),
+)
+def hard_negative_mining_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The SCALE PATH for hard-negative mining: the GEMM-blocked
+    bipartite k-NN join with same-label cells masked inside each block
+    sub-matrix before block-local top-k — exact top-k among
+    different-label vectors without materializing the similarity
+    matrix or the n² pair list. Shuffle carries k rows per (query,
+    corpus-block); corpus replication is n_query_blocks×."""
+    from data_eng_project_spark.operators.similarity import knn_join_blocked
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    return knn_join_blocked(
+        emb.select("vec_id", "embedding", "label"),
+        emb.select("vec_id", "embedding", "label"),
+        k=3,
+        exclude_match_col="label",
+    )
+
+
+@register(
+    "minhash_accuracy_report",
+    # Since r11 the MinHash pair list itself is fully replay-oracled
+    # (dedup_minhash_lsh — md5-derived universal-hash signatures); this
+    # report remains the RECALL grade, the quality dimension a hash
+    # match can't express. Three facts are independently checkable:
+    # the exact pair count (recomputed from the n-gram CTE), zero
+    # spurious pairs (every LSH candidate is exact-Jaccard-verified
+    # before emission, so precision is 1 by construction), and the
+    # sketch's recall contract (≥ 0.99 at 64 hashes / 16 bands for
+    # τ=0.5, genuinely measured). The engine-specific raw counts stay
+    # observable in the booleans' inputs, not the compared output.
+    oracle=f"""
+        WITH {_NGRAM_CTES}
+        SELECT CAST(count(*) AS BIGINT) AS exact_pairs,
+               CAST(0 AS BIGINT) AS spurious_pairs,
+               TRUE AS recall_ok
+        FROM pairs
+    """,
+    tags=("dedup", "minhash", "evaluation"),
+)
+def minhash_accuracy_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sketch-accuracy accounting made driver-visible: MinHash-LSH
+    verified pairs vs the exact PPJoin Jaccard pairs on the same corpus
+    and threshold, in ONE row — the exact pair count, the spurious-pair
+    count (0 by construction: LSH candidates are exact-verified), and
+    whether measured recall met the ≥0.99 sketch contract. This is the
+    evidence that justifies running the sketch path at 100 TB where the
+    exact join's candidate set would be too hot; the DuckDB oracle
+    recomputes the exact side independently and asserts the contract."""
+    from data_eng_project_spark.pipelines.staging import near_dup_pairs
+
+    docs = load_table(spark, sf_dir, "documents")
+    exact = near_dup_pairs(
+        spark, sf_dir, n=3, threshold=JACCARD_THRESHOLD
+    ).select("id_a", "id_b")
+    sketch = D.minhash_lsh_pairs(
+        docs, "text", "doc_id", num_hashes=64, bands=16,
+        threshold=JACCARD_THRESHOLD,
+    ).select("id_a", "id_b")
+    # ONE pass: outer-join the two distinct pair sets and classify each
+    # pair as TP/FN/FP in a single aggregate. The naive three-action
+    # form (intersect().count(), two exceptAll().count()s) re-executed
+    # the banded LSH self-join three times over unpersisted lineage —
+    # the most expensive subplan in the query (round-4 self-review).
+    e = exact.distinct().withColumn("_e", F.lit(1))
+    s = sketch.distinct().withColumn("_s", F.lit(1))
+    j = e.join(s, on=["id_a", "id_b"], how="full_outer")
+    tp = F.col("_tp")
+    fn = F.col("_fn")
+    return (
+        j.agg(
+            F.sum(F.when(F.col("_e").isNotNull() & F.col("_s").isNotNull(), 1).otherwise(0))
+            .cast("bigint")
+            .alias("_tp"),
+            F.sum(F.when(F.col("_e").isNotNull() & F.col("_s").isNull(), 1).otherwise(0))
+            .cast("bigint")
+            .alias("_fn"),
+            F.sum(F.when(F.col("_e").isNull() & F.col("_s").isNotNull(), 1).otherwise(0))
+            .cast("bigint")
+            .alias("spurious_pairs"),
+        )
+        .select(
+            (tp + fn).alias("exact_pairs"),
+            "spurious_pairs",
+            (
+                F.when(tp + fn > 0, tp.cast("double") / (tp + fn)).otherwise(1.0)
+                >= F.lit(0.99)
+            ).alias("recall_ok"),
+        )
     )

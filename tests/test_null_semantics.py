@@ -6,16 +6,16 @@ pins the NULL behavior of each shape with a real-NULL fixture so a
 future refactor (e.g. to a null-safe join helper) cannot silently flip
 the semantics the oracles assume:
 
-1. **Filter-isin** (``events.filter(col.isin(...))`` — analytics5
-   touchpoints, analytics4 nation/c_nationkey, similarity cluster/id
+1. **Filter-isin** (``events.filter(col.isin(...))`` — analytics
+   touchpoints and nation/c_nationkey, similarity cluster/id
    probes): a NULL key makes the predicate NULL and the row DROPS —
    exactly SQL ``WHERE k IN (...)``, which every paired oracle uses.
-2. **dq_report rule-isin** (analytics5 `status_in_domain`): a NULL key
+2. **dq_report rule-isin** (analytics `status_in_domain`): a NULL key
    makes the rule predicate NULL and the row counts as a VIOLATION
    (``when(pred, 0).otherwise(1)``) — the documented contract
    (operators/quality.py:29-31) and what the dq oracles replay with
    ``CASE WHEN pred THEN 0 ELSE 1 END``.
-3. **Conditional-agg isin** (analytics3 `high_line_count`,
+3. **Conditional-agg isin** (analytics `high_line_count`,
    curation stopword mass): ``count(when(col.isin(...), 1))`` /
    ``sum(when(..., c).otherwise(0))`` — NULL keys fall through to the
    not-counted / otherwise branch, matching the oracles'

@@ -88,3 +88,18 @@ def test_rows_only_runs(spark, sf_dir, name):
     df = spec.fn(spark, sf_dir)
     assert df.columns  # stable schema
     assert df.count() >= 0
+
+
+def test_query_index_is_current():
+    """QUERIES.md is regenerated from the registry (tools/gen_query_index.py):
+    a moved query, a tag or oracle edit, or a rows-only query without its
+    rationale shows up here instead of in a stale index."""
+    import importlib.util
+    import os
+
+    path = os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools", "gen_query_index.py")
+    spec = importlib.util.spec_from_file_location("gen_query_index", path)
+    gen = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(gen)
+    with open(gen.QUERIES_MD) as f:
+        assert gen.render() == f.read()

@@ -56,7 +56,7 @@ def test_bucketed_join_has_no_shuffle(spark, tmp_path):
 def test_compact_parquet_reduces_files(spark, tmp_path):
     """Compaction: 12 tiny appended files collapse to 1; rows and a
     decimal checksum survive byte-exactly."""
-    from data_eng_project_spark.operators.sink import compact_parquet
+    from data_eng_project_spark.operators.sink import optimize_table
     from data_eng_project_spark.tables import load_table
 
     path = str(tmp_path / "accreted")
@@ -66,7 +66,7 @@ def test_compact_parquet_reduces_files(spark, tmp_path):
     before_sum = spark.read.parquet(path).agg(
         F.sum(F.col("o_totalprice").cast("decimal(28,6)"))
     ).collect()[0][0]
-    n_before, n_after = compact_parquet(spark, path, target_file_mb=128)
+    n_before, n_after = optimize_table(spark, path, target_file_mb=128)
     assert n_before >= 12 and n_after == 1
     after = spark.read.parquet(path)
     assert after.count() == src.count()
@@ -82,7 +82,7 @@ def test_compact_parquet_preserves_partitioned_layout(spark, tmp_path):
     from a top-level-only listing."""
     import os
 
-    from data_eng_project_spark.operators.sink import compact_parquet, write_partitioned
+    from data_eng_project_spark.operators.sink import optimize_table, write_partitioned
     from data_eng_project_spark.tables import load_table
 
     path = str(tmp_path / "part_table")
@@ -97,14 +97,14 @@ def test_compact_parquet_preserves_partitioned_layout(spark, tmp_path):
         ).parquet(path)
     years_before = {d for d in os.listdir(path) if d.startswith("y=")}
     rows_before = spark.read.parquet(path).count()
-    compact_parquet(spark, path, target_file_mb=128)
+    optimize_table(spark, path, target_file_mb=128)
     years_after = {d for d in os.listdir(path) if d.startswith("y=")}
     assert years_after == years_before  # layout preserved, not flattened
     after = spark.read.parquet(path)
     assert after.count() == rows_before
     assert "y" in after.columns
     # no leftover rewrite/backup dirs
-    assert not os.path.exists(path + "__compacting")
+    assert not os.path.exists(path + "__optimizing")
     assert not os.path.exists(path + "__pre_rewrite")
 
 
@@ -115,7 +115,7 @@ def test_compact_parquet_splits_skewed_partition_value(spark, tmp_path):
     collapse to a single file, and results are row-identical."""
     import os
 
-    from data_eng_project_spark.operators.sink import compact_parquet
+    from data_eng_project_spark.operators.sink import optimize_table
 
     path = str(tmp_path / "skewed")
     # hot partition p=hot carries ~200k rows of strings; p=cold has 10
@@ -140,7 +140,7 @@ def test_compact_parquet_splits_skewed_partition_value(spark, tmp_path):
     before = spark.read.parquet(path)
     rows_before = before.count()
     ksum_before = before.agg(F.sum("k")).collect()[0][0]
-    compact_parquet(spark, path, target_file_mb=target_mb)
+    optimize_table(spark, path, target_file_mb=target_mb)
     hot_files = [
         f for f in os.listdir(os.path.join(path, "p=hot")) if f.endswith(".parquet")
     ]
@@ -378,6 +378,27 @@ def test_registry_prepares_every_query(spark, sf_dir):
             spark.conf.set(k, v)
 
 
+def test_queries_leave_no_temp_views(spark, sf_dir):
+    """Queries written as ``spark.sql`` text bind their tables as
+    DataFrame arguments, so they neither replace a same-named view in
+    the caller's long-lived session nor leave one behind."""
+    from data_eng_project_spark.plans import REGISTRY
+
+    def temp_names() -> set[str]:
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    before = temp_names()
+    for name in (
+        "grouping_sets_revenue",
+        "scalar_subquery_above_avg",
+        "q2_max_order_per_customer",
+        "q16_parts_never_ordered",
+        "sql_api_revenue_report",
+    ):
+        assert REGISTRY[name].fn(spark, sf_dir).count() > 0
+    assert temp_names() == before
+
+
 def test_compact_parquet_handles_map_columns(spark, tmp_path):
     """Regression (r5 review): the sized-compaction salt is xxhash64 of
     the data columns, but Spark's hash functions reject MapType — a
@@ -385,7 +406,7 @@ def test_compact_parquet_handles_map_columns(spark, tmp_path):
     (salting on the hashable columns only), not fail analysis."""
     from pyspark.sql import functions as F
 
-    from data_eng_project_spark.operators.sink import compact_parquet
+    from data_eng_project_spark.operators.sink import optimize_table
 
     path = str(tmp_path / "map_tbl")
     df = (
@@ -397,7 +418,7 @@ def test_compact_parquet_handles_map_columns(spark, tmp_path):
         )
     )
     df.repartition(8).write.partitionBy("part").parquet(path)
-    compact_parquet(spark, path, target_file_mb=128)
+    optimize_table(spark, path, target_file_mb=128)
     back = spark.read.parquet(path)
     assert back.count() == 2000
     # values (including the map payload) survive the rewrite
@@ -410,7 +431,7 @@ def test_compact_parquet_map_only_data_column(spark, tmp_path):
     layout-preserving rewrite (no salt available) instead of failing."""
     from pyspark.sql import functions as F
 
-    from data_eng_project_spark.operators.sink import compact_parquet
+    from data_eng_project_spark.operators.sink import optimize_table
 
     path = str(tmp_path / "map_only_tbl")
     df = spark.range(0, 500).select(
@@ -418,7 +439,7 @@ def test_compact_parquet_map_only_data_column(spark, tmp_path):
         F.create_map(F.lit("k"), F.col("id").cast("string")).alias("attrs"),
     )
     df.repartition(4).write.partitionBy("part").parquet(path)
-    compact_parquet(spark, path, target_file_mb=128)
+    optimize_table(spark, path, target_file_mb=128)
     assert spark.read.parquet(path).count() == 500
 
 

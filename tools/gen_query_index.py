@@ -68,7 +68,11 @@ _ROWS_ONLY_RATIONALE = {
 }
 
 
-def main() -> None:
+QUERIES_MD = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "QUERIES.md")
+
+
+def render() -> str:
+    """The text of QUERIES.md for the current REGISTRY."""
     # The rationale table must track the REGISTRY's actual rows-only
     # set (oracle is None).
     rows_only = {n for n, s in REGISTRY.items() if s.oracle is None}
@@ -110,10 +114,13 @@ def main() -> None:
     ]
     for name in sorted(_ROWS_ONLY_RATIONALE):
         lines.append(f"| `{name}` | {_ROWS_ONLY_RATIONALE[name]} |")
-    out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "QUERIES.md")
-    with open(out, "w") as f:
-        f.write("\n".join(lines) + "\n")
-    print(f"wrote {out}: {len(REGISTRY)} queries")
+    return "\n".join(lines) + "\n"
+
+
+def main() -> None:
+    with open(QUERIES_MD, "w") as f:
+        f.write(render())
+    print(f"wrote {QUERIES_MD}: {len(REGISTRY)} queries")
 
 
 if __name__ == "__main__":
