@@ -3,30 +3,24 @@
 Pairwise near-dup detection (operators/dedup.py) emits edges; the
 deliverable of a dedup stage is the *cluster*: every document labeled
 with its component's canonical (minimum) id, so "keep one per cluster"
-is a single filter. Components are computed with iterative min-label
-propagation — each round, every node takes the minimum label among
-itself and its neighbors; a fixpoint is reached after O(diameter)
-rounds. Near-dup graphs have tiny diameters (dup clusters are near-
-cliques), so this converges in a handful of rounds.
+is a single filter.
 
-Scale design: each round is one join + one groupBy (shuffle on node id —
-AQE-coalesced); lineage is cut every round with a *lazy*
-``localCheckpoint`` so the plan doesn't grow unboundedly; convergence is
-detected from a 1-row aggregate (sum of labels, strictly decreasing
-until fixpoint) — no data rows ever reach the driver. The aggregate is
-the one action that both materializes the round and reads the fixpoint
-signal, and it runs every round: under AQE the checkpoint's shuffle
-costs a job whether or not the sum is read, so testing only every
-second round saved nothing and overshot the fixpoint by a round (on the
-staged dup graph: 2 rounds and 22 jobs instead of 4 and 34, CHANGES.md).
-The first propagation round is fused into label initialization (a
-single groupBy over the edge list), and every subsequent round
-pointer-jumps (path halving), so chains collapse in O(log diameter)
-rounds. This is the DataFrame variant of the classic Pregel-style label
-propagation; for adversarial billion-edge graphs you'd switch to the
-large-star/small-star alternation (Kiveris et al., "Connected Components
-in MapReduce and Beyond"), which bounds rounds at O(log n) on any
-topology.
+``connected_components`` solves the whole pair graph as one row in one
+task: the nodes are indexed in id order, one join hands every edge its
+neighbour's index, the per-node neighbour lists are collected into one
+row, and one ``aggregate`` runs min-label hooking with pointer jumping
+over index arrays until a hook changes nothing. That is five Spark jobs
+whatever the round count, with no checkpoint and no driver round trip.
+The per-round join+groupBy loop it replaced ran 22 jobs on the staged
+sf0.1 dup graph, where each job cost more than the data; at the 10x
+replica (50,000 nodes, 250,600 pairs, 4,756 components) both give
+identical labels, and the warm time on a 4-core host fell from
+2.8-3.4 s to 1.6-2.1 s (CHANGES.md). The price is a scale bound:
+the graph must fit in one task (see the function). Near-dup graphs are
+bounded by corpus size times a small degree; an adversarial
+billion-edge graph needs the distributed large-star/small-star
+alternation (Kiveris et al., "Connected Components in MapReduce and
+Beyond"), which bounds rounds at O(log n) on any topology.
 
 PageRank reuses the components: it solves each component as one row
 (see ``pagerank``), so its ten rounds cost no jobs of their own.
@@ -45,51 +39,103 @@ def connected_components(
     max_iter: int = 25,
 ) -> DataFrame:
     """Label every node of the undirected pair graph with its component's
-    minimum node id. Returns (id, component). Nodes appear iff they occur
-    in at least one edge."""
-    sym = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .union(edges.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst")))
-        .distinct()
-        .localCheckpoint()
+    minimum node id. Returns (id, comp). Nodes appear iff they occur in
+    at least one edge.
+
+    Algorithm. Nodes get a dense 0-based index in id order, so a
+    component's minimum index is its minimum id. One row holds the
+    id-ordered ``ids`` and, per node, its neighbours' indices, and one
+    ``aggregate`` alternates two steps over the label array L: the hook
+    ``L[k] = min(L[k], min over neighbours j of L[j])`` and the pointer
+    jump ``L[k] = L[L[k]]``. It stops at the first hook that changes
+    nothing; then every node's label equals its neighbours', so each
+    component carries its minimum. A jump that changes nothing proves
+    nothing: on the path A(2)-B(3)-C(1) it leaves A at 2. Labels only
+    fall, so the hooks finish within diameter + 1 rounds; jumping
+    collapses an id-ordered chain in O(log length) rounds, and a
+    near-clique dup graph in one (plus the certifying hook). After
+    ``max_iter`` rounds of both steps the labels are returned as they
+    stand. Per row the work is O((N + E) * rounds). Every lambda reads
+    only accumulator fields: Spark does no common-subexpression
+    elimination inside lambdas, so a lambda that read an array built by
+    another ``transform`` of the same step would rebuild it per element.
+
+    Jobs. Writing the result runs five Spark jobs whatever the round
+    count: the sorted id array, the index join, the per-node grouping,
+    the one-row collect and the result. Building the plan runs none, and
+    nothing is persisted, checkpointed or collected to the driver.
+
+    Scale bound: the sorted id array and the node and adjacency arrays
+    must fit in one row of one task, like one component in ``pagerank``.
+    At the 10x sf0.1 replica that is 50,000 nodes and 501,200 neighbour
+    entries, about 4 MB.
+    """
+    sym = edges.select(
+        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
+    ).union(edges.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst")))
+    # A node's index is its position in the sorted id array. posexplode
+    # gives it without a global window: a window with no partition key
+    # sorts every edge row in one task, and tests/test_plan_quality.py
+    # bars it from query plans. The index join and the per-node grouping
+    # stay distributed; only the id array and the final row are built in
+    # one task.
+    sorted_ids = sym.groupBy().agg(F.array_sort(F.collect_set("src")).alias("ids"))
+    index = sorted_ids.select(F.posexplode("ids").alias("j", "dst"))
+    graph = (
+        sym.join(index, "dst")
+        .groupBy("src")
+        .agg(F.collect_list("j").alias("nb"))
+        .groupBy()
+        .agg(
+            F.array_sort(
+                F.collect_list(F.struct(F.col("src").alias("id"), "nb"))
+            ).alias("_nodes")
+        )
     )
-    # Round 1 fused into initialization: every node starts at
-    # min(id, min(neighbors)) from ONE aggregation over the symmetric edge
-    # list — no label join needed while labels are still the identity.
-    # (Every node appears as src because sym is symmetrized.)
-    labels = sym.groupBy("src").agg(
-        F.least(F.col("src"), F.min("dst")).alias("comp")
-    ).select(F.col("src").alias("id"), "comp")
-    prev_sum = None
-    for _ in range(max_iter):
-        neighbor_min = (
-            sym.join(labels, sym["dst"] == labels["id"])
-            .groupBy("src")
-            .agg(F.min("comp").alias("ncomp"))
+
+    def state(ids, nb, labels, prev, done):
+        return F.struct(
+            ids.alias("ids"),
+            nb.alias("nb"),
+            labels.alias("L"),
+            prev.alias("P"),
+            done.alias("done"),
         )
-        labels = labels.join(
-            neighbor_min, labels["id"] == neighbor_min["src"], "left"
-        ).select(
-            "id",
-            F.least(F.col("comp"), F.coalesce("ncomp", "comp")).alias("comp"),
+
+    def step(acc, i):
+        ids, nb, labels = acc["ids"], acc["nb"], acc["L"]
+        hook = F.transform(
+            nb,
+            lambda ns, k: F.aggregate(ns, labels[k], lambda m, j: F.least(m, labels[j])),
         )
-        # Pointer jumping (path halving) every round: also adopt the label
-        # OF our label — long chains collapse in O(log diameter) combined
-        # rounds instead of O(diameter). Monotone (labels only decrease)
-        # ⇒ the fixpoint test is unaffected.
-        hop = labels.select(F.col("id").alias("_pid"), F.col("comp").alias("_pcomp"))
-        labels = labels.join(hop, labels["comp"] == hop["_pid"], "left").select(
-            "id",
-            F.least(F.col("comp"), F.coalesce("_pcomp", "comp")).alias("comp"),
+        jump = F.transform(labels, lambda lk: labels[lk])
+        # Odd steps hook and keep the labels they started from; the jump
+        # after a hook that changed nothing (L == P) marks the fixpoint.
+        return (
+            F.when(acc["done"], acc)
+            .when(i % 2 == 1, state(ids, nb, hook, labels, F.lit(False)))
+            .otherwise(state(ids, nb, jump, labels, labels == acc["P"]))
         )
-        # Lazy lineage cut: the convergence aggregate below is the action
-        # that materializes it (one job, not checkpoint-job + agg-job).
-        labels = labels.localCheckpoint(eager=False)
-        cur_sum = labels.agg(F.sum("comp")).collect()[0][0]
-        if cur_sum == prev_sum:  # min-propagation monotone ⇒ fixpoint
-            break
-        prev_sum = cur_sum
-    return labels.select("id", "comp")
+
+    start = F.transform("_nodes", lambda _, k: k)
+    labels = F.aggregate(
+        F.sequence(F.lit(1), F.lit(2 * int(max_iter))),
+        state(
+            F.transform("_nodes", lambda n: n["id"]),
+            F.transform("_nodes", lambda n: n["nb"]),
+            start,
+            start,
+            F.lit(False),
+        ),
+        step,
+        lambda acc: F.transform(
+            acc["L"],
+            lambda lk, k: F.struct(
+                acc["ids"][k].alias("id"), acc["ids"][lk].alias("comp")
+            ),
+        ),
+    )
+    return graph.select(F.inline(labels))
 
 
 def dedup_cluster_assignments(

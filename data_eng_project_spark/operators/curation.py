@@ -1173,8 +1173,8 @@ def soft_dedup_weights(
     mixture planner feeds into its sampling rates.
 
     Scale design: one connected-components run over the pair list
-    (min-label propagation, O(diameter) rounds — operators/clusters.py),
-    one cluster-size aggregate, one left join back to the corpus scan.
+    (one task — operators/clusters.py), one cluster-size aggregate, one
+    left join back to the corpus scan.
     The weight is derived, not stored state, so incremental corpus
     growth just re-runs components on the (small) pair graph.
     """

@@ -314,7 +314,13 @@ def _ppjoin_pairs_from_sets(sets: DataFrame, threshold: float) -> DataFrame:
         "_id", F.size("_set").alias("_n"), F.explode("_set").alias("shingle")
     )
     freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("_f"))
-    ranked = sh.join(freq, on="shingle").withColumn(
+    # A left join (every shingle has its count, so it keeps the same rows)
+    # lets only freq be the broadcast side. Under an inner join AQE built
+    # the broadcast from whichever side's runtime stats arrived smaller;
+    # when it picked the exploded shingle rows, the join output lost the
+    # _id partitioning and the rank window paid one more single-task
+    # shuffle (3.85 MB at sf0.1) and one more job (CHANGES.md).
+    ranked = sh.join(freq, on="shingle", how="left").withColumn(
         "_rank",
         F.row_number().over(
             Window.partitionBy("_id").orderBy(F.col("_f").asc(), F.col("shingle").asc())

@@ -183,6 +183,11 @@ def dup_components_path(sf_dir: str, n: int = 3, threshold: float = 0.5) -> str:
     )
 
 
+# Readers pass the staged schema, so a read plans without the footer job
+# that schema inference would run.
+NEAR_DUP_PAIRS_SCHEMA = "id_a long, id_b long, jaccard double"
+
+
 def near_dup_pairs(
     spark: SparkSession,
     sf_dir: str,
@@ -202,7 +207,7 @@ def near_dup_pairs(
         docs = load_table(spark, sf_dir, "documents")
         pairs = D.ngram_jaccard_pairs(docs, "text", "doc_id", n=n, threshold=threshold)
         materialize_once(pairs, path)
-    return spark.read.parquet(path).select("id_a", "id_b", "jaccard")
+    return spark.read.schema(NEAR_DUP_PAIRS_SCHEMA).parquet(path)
 
 
 # The five registry consumers of the staged pair graph — the single
@@ -271,6 +276,9 @@ def timed_staged_run(spark: SparkSession, sf_dir: str) -> dict:
     }
 
 
+DUP_COMPONENTS_SCHEMA = "id long, comp long"
+
+
 def dup_components(
     spark: SparkSession,
     sf_dir: str,
@@ -278,12 +286,12 @@ def dup_components(
     threshold: float = 0.5,
 ) -> DataFrame:
     """The staged connected components (id, comp) of the near-dup pair
-    graph — derived from the staged pair list, so the iterative
-    min-label propagation also runs at most once per corpus."""
+    graph — derived from the staged pair list, so the component labelling
+    also runs at most once per corpus."""
     from data_eng_project_spark.operators.clusters import connected_components
 
     path = dup_components_path(sf_dir, n=n, threshold=threshold)
     if not _is_staged(path):
         pairs = near_dup_pairs(spark, sf_dir, n=n, threshold=threshold)
         materialize_once(connected_components(pairs), path)
-    return spark.read.parquet(path).select("id", "comp")
+    return spark.read.schema(DUP_COMPONENTS_SCHEMA).parquet(path)

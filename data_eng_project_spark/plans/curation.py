@@ -54,7 +54,6 @@ from data_eng_project_spark.operators.datasetops import (
     boilerplate_segment_stats,
     cdc_chunk_stats,
 )
-from data_eng_project_spark.plans.registry import REGISTRY as _REG
 from data_eng_project_spark.plans.registry import register
 from data_eng_project_spark.plans.textdata import (
     _COMPONENT_CTES,
@@ -1444,48 +1443,6 @@ def mixture_temperature_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "quality_retention_curve",
-    oracle=None,  # assembled below (needs textdata's stopword SQL terms)
-    tags=("curation", "quality", "ablation"),
-)
-def quality_retention_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The quality-filter ablation curve: documents bucketed by fixed-
-    width stopword-ratio bands (0.05 wide), and for every band the
-    docs/tokens that SURVIVE a "keep score ≥ band" cutoff — the table a
-    curation owner reads to pick a threshold by seeing exactly how many
-    tokens each notch costs. Fixed absolute bands (not rank deciles) on
-    purpose: the heavy pass is a pure map-side bucket aggregate with no
-    global sort, and the cumulative sweep is a window over the ~13 band
-    rows — the PSI-bucket pattern, scale-free."""
-    from pyspark.sql import Window
-
-    from data_eng_project_spark.functions.text import tokens as _tokens
-    from data_eng_project_spark.operators.textops import quality_score
-
-    docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(_tokens("text"), lambda x: x != F.lit(""))
-    scored = quality_score(docs).select(
-        "doc_id",
-        F.floor(F.col("stopword_ratio") * 20).cast("int").alias("band"),
-    ).join(docs.select("doc_id", F.size(toks).alias("_nt")), on="doc_id")
-    per_band = scored.groupBy("band").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.sum("_nt").cast("bigint").alias("n_tokens"),
-    )
-    w = Window.orderBy(F.col("band").desc()).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    return per_band.select(
-        F.col("band").cast("bigint").alias("band"),
-        F.round(F.col("band") / 20.0, 6).alias("min_score"),
-        "n_docs",
-        "n_tokens",
-        F.sum("n_docs").over(w).cast("bigint").alias("cum_docs_kept"),
-        F.sum("n_tokens").over(w).cast("bigint").alias("cum_tokens_kept"),
-    )
-
-
 def _retention_oracle() -> str:
     from data_eng_project_spark.plans.textdata import _PADDED
     from data_eng_project_spark.functions.text import (
@@ -1525,7 +1482,46 @@ def _retention_oracle() -> str:
     """
 
 
-_REG["quality_retention_curve"].oracle = _retention_oracle()
+@register(
+    "quality_retention_curve",
+    oracle=_retention_oracle(),
+    tags=("curation", "quality", "ablation"),
+)
+def quality_retention_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The quality-filter ablation curve: documents bucketed by fixed-
+    width stopword-ratio bands (0.05 wide), and for every band the
+    docs/tokens that SURVIVE a "keep score ≥ band" cutoff — the table a
+    curation owner reads to pick a threshold by seeing exactly how many
+    tokens each notch costs. Fixed absolute bands (not rank deciles) on
+    purpose: the heavy pass is a pure map-side bucket aggregate with no
+    global sort, and the cumulative sweep is a window over the ~13 band
+    rows — the PSI-bucket pattern, scale-free."""
+    from pyspark.sql import Window
+
+    from data_eng_project_spark.functions.text import tokens as _tokens
+    from data_eng_project_spark.operators.textops import quality_score
+
+    docs = load_table(spark, sf_dir, "documents")
+    toks = F.filter(_tokens("text"), lambda x: x != F.lit(""))
+    scored = quality_score(docs).select(
+        "doc_id",
+        F.floor(F.col("stopword_ratio") * 20).cast("int").alias("band"),
+    ).join(docs.select("doc_id", F.size(toks).alias("_nt")), on="doc_id")
+    per_band = scored.groupBy("band").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+        F.sum("_nt").cast("bigint").alias("n_tokens"),
+    )
+    w = Window.orderBy(F.col("band").desc()).rowsBetween(
+        Window.unboundedPreceding, 0
+    )
+    return per_band.select(
+        F.col("band").cast("bigint").alias("band"),
+        F.round(F.col("band") / 20.0, 6).alias("min_score"),
+        "n_docs",
+        "n_tokens",
+        F.sum("n_docs").over(w).cast("bigint").alias("cum_docs_kept"),
+        F.sum("n_tokens").over(w).cast("bigint").alias("cum_tokens_kept"),
+    )
 
 
 @register(

@@ -27,7 +27,6 @@ from data_eng_project_spark.operators import dedup as D
 from data_eng_project_spark.operators import similarity as S
 from data_eng_project_spark.operators import textops as T
 from data_eng_project_spark.operators.curation import top_bigrams_by_source
-from data_eng_project_spark.plans.registry import REGISTRY as _REG
 from data_eng_project_spark.plans.registry import register
 from data_eng_project_spark.tables import load_table, rebalance_if_unsplittable
 
@@ -409,12 +408,11 @@ def dedup_ngram_jaccard_collapsed(spark: SparkSession, sf_dir: str) -> DataFrame
 )
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup *clusters*: connected components over the exact-Jaccard
-    pair graph via iterative min-label propagation (O(diameter) rounds,
-    one join+groupBy per round — see operators/clusters.py). The oracle
-    computes the same components with a recursive transitive closure,
-    which only an exact pair graph makes feasible. Consumes the STAGED
-    pair graph (pipelines/staging.py): the iterative propagation
-    re-scans a parquet pair list each round, not the similarity join."""
+    pair graph, labelled in one task (see operators/clusters.py). The
+    oracle computes the same components with a recursive transitive
+    closure, which only an exact pair graph makes feasible. Consumes the
+    STAGED pair graph (pipelines/staging.py): the labelling reads a
+    parquet pair list, not the similarity join."""
     from data_eng_project_spark.operators.clusters import dedup_cluster_assignments
     from data_eng_project_spark.pipelines.staging import near_dup_pairs
 
@@ -2591,46 +2589,6 @@ def _clean_ngram_ctes() -> str:
     return _NGRAM_CTES.replace("FROM documents", "FROM clean")
 
 
-@register(
-    "dataset_release_pipeline",
-    oracle=None,  # assembled in _release_oracle() below (needs the
-    # textdata language CASE; registered via REGISTRY patch right after)
-    tags=("pipeline", "composite", "release"),
-)
-def dataset_release_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full dataset-release chain as ONE declarative config —
-    language filter → min-length → exact dedup → near-dup canonical
-    keep → deterministic split tag — folded by pipelines/composer into
-    a single lazy plan, reported as the per-(split, source) release
-    table. The oracle replays every stage in SQL (recursive transitive
-    closure for the dup components), so the whole chained semantics is
-    bit-certified, not just each stage in isolation."""
-    from data_eng_project_spark.pipelines.composer import compose
-    from data_eng_project_spark.functions.text import tokens as _tokens
-
-    docs = load_table(spark, sf_dir, "documents")
-    released = compose(
-        docs,
-        [
-            {"stage": "lang_filter", "lang": "en"},
-            {"stage": "min_words", "n": 20},
-            {"stage": "dedup_exact"},
-            # near-dup pairs come from the staged corpus pair graph,
-            # restricted to survivors of the upstream filters — equal to
-            # recomputing on the subset (Jaccard is pairwise) but without
-            # a second corpus-scale similarity join.
-            {"stage": "near_dedup", "n": 3, "threshold": 0.5,
-             "staged_corpus_dir": sf_dir},
-            {"stage": "split_tag", "train_pct": _TRAIN_PCT, "val_pct": _VAL_PCT},
-        ],
-    )
-    toks = F.filter(_tokens("text"), lambda x: x != F.lit(""))
-    return released.groupBy("split", "source").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.sum(F.size(toks)).cast("bigint").alias("n_tokens"),
-    )
-
-
 def _release_oracle() -> str:
     return f"""
         WITH RECURSIVE canon AS (
@@ -2668,7 +2626,43 @@ def _release_oracle() -> str:
     """
 
 
-_REG["dataset_release_pipeline"].oracle = _release_oracle()
+@register(
+    "dataset_release_pipeline",
+    oracle=_release_oracle(),
+    tags=("pipeline", "composite", "release"),
+)
+def dataset_release_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The full dataset-release chain as ONE declarative config —
+    language filter → min-length → exact dedup → near-dup canonical
+    keep → deterministic split tag — folded by pipelines/composer into
+    a single lazy plan, reported as the per-(split, source) release
+    table. The oracle replays every stage in SQL (recursive transitive
+    closure for the dup components), so the whole chained semantics is
+    bit-certified, not just each stage in isolation."""
+    from data_eng_project_spark.pipelines.composer import compose
+    from data_eng_project_spark.functions.text import tokens as _tokens
+
+    docs = load_table(spark, sf_dir, "documents")
+    released = compose(
+        docs,
+        [
+            {"stage": "lang_filter", "lang": "en"},
+            {"stage": "min_words", "n": 20},
+            {"stage": "dedup_exact"},
+            # near-dup pairs come from the staged corpus pair graph,
+            # restricted to survivors of the upstream filters — equal to
+            # recomputing on the subset (Jaccard is pairwise) but without
+            # a second corpus-scale similarity join.
+            {"stage": "near_dedup", "n": 3, "threshold": 0.5,
+             "staged_corpus_dir": sf_dir},
+            {"stage": "split_tag", "train_pct": _TRAIN_PCT, "val_pct": _VAL_PCT},
+        ],
+    )
+    toks = F.filter(_tokens("text"), lambda x: x != F.lit(""))
+    return released.groupBy("split", "source").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+        F.sum(F.size(toks)).cast("bigint").alias("n_tokens"),
+    )
 
 
 @register(

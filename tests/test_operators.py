@@ -381,33 +381,33 @@ def test_connected_components_chain_and_islands(spark):
     }
 
 
-def test_connected_components_stop_one_round_after_fixpoint(spark, monkeypatch):
-    """Disjoint cliques are fully labeled by the fused initialization
-    round, so two propagation rounds with equal label sums certify the
-    fixpoint; the convergence check runs every round, so no third round
-    (one lazy checkpoint each) is built."""
+def test_connected_components_job_count_is_independent_of_rounds(spark):
+    """The rounds run inside one task, so the job count does not grow
+    with them: a 64-node path needs ~7 hook/jump rounds, and building
+    plus collecting the labels (with three disjoint cliques beside it)
+    runs a fixed handful of Spark jobs (5 here). A per-round
+    join+groupBy loop runs several jobs per round (57 here)."""
     from itertools import combinations
 
     from data_eng_project_spark.operators.clusters import connected_components
 
     cliques = [(1, 2, 3), (5, 6, 7, 8), (20, 21)]
+    path = tuple(range(100, 164))
     edges = spark.createDataFrame(
-        [pair for c in cliques for pair in combinations(c, 2)],
+        [pair for c in cliques for pair in combinations(c, 2)]
+        + [(a, a + 1) for a in path[:-1]],
         "id_a long, id_b long",
     )
-    lazy_cuts = []
-    frame_cls = type(edges)
-    checkpoint = frame_cls.localCheckpoint
-
-    def counting(self, eager=True, *args, **kwargs):
-        if not eager:
-            lazy_cuts.append(1)
-        return checkpoint(self, eager, *args, **kwargs)
-
-    monkeypatch.setattr(frame_cls, "localCheckpoint", counting)
-    got = {(r.id, r.comp) for r in connected_components(edges).collect()}
-    assert got == {(n, min(c)) for c in cliques for n in c}
-    assert len(lazy_cuts) == 2
+    sc = spark.sparkContext
+    group = "connected-components-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        got = {(r.id, r.comp) for r in connected_components(edges).collect()}
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got == {(n, min(c)) for c in [*cliques, path] for n in c}
+    assert jobs <= 6
 
 
 def test_connected_components_long_path_converges_fast(spark):

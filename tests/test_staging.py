@@ -71,6 +71,27 @@ def test_stage_materialized_once_and_plans_scan_it(spark, sf_dir, stage_dir):
     assert os.path.getmtime(os.path.join(path, "_SUCCESS")) == built_at
 
 
+def test_staged_reads_run_no_job_and_declare_the_written_schema(spark, sf_dir, stage_dir):
+    """Reading an already-staged artifact plans from the declared schema,
+    so it runs no Spark job (no parquet footer read), and the declared
+    schema is the one the producers actually write."""
+    staging.dup_components(spark, sf_dir, n=3, threshold=0.5)
+    sc = spark.sparkContext
+    group = "staged-reads"
+    sc.setJobGroup(group, group)
+    try:
+        pairs = staging.near_dup_pairs(spark, sf_dir, n=3, threshold=0.5)
+        comps = staging.dup_components(spark, sf_dir, n=3, threshold=0.5)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    for df, path in (
+        (pairs, staging.near_dup_pairs_path(sf_dir, n=3, threshold=0.5)),
+        (comps, staging.dup_components_path(sf_dir, n=3, threshold=0.5)),
+    ):
+        assert df.schema == spark.read.parquet(path).schema
+
+
 def test_distinct_param_sets_get_distinct_stages(sf_dir):
     p1 = staging.near_dup_pairs_path(sf_dir, n=3, threshold=0.5)
     p2 = staging.near_dup_pairs_path(sf_dir, n=4, threshold=0.5)
