@@ -5,12 +5,15 @@ JSON line:
 
     metric, value (sum of the 21 headline minima, sec), unit, queries,
     sf, cpus_effective, master, shuffle_partitions, headline_set_version,
-    extended_queries, extended_total, staged, steal_pct
+    extended_queries, extended_total, staged, steal_pct, codegen_compiles
 
 Each query is materialized through the noop sink: every output column is
 computed, with no write cost and no driver collect. Host noise is
 recorded, not gated: ``steal_pct`` is the host CPU-steal share over the
 timed sweeps (BASELINE.md, round 11 root cause), ``null`` off Linux.
+``codegen_compiles`` counts the generated classes compiled during the
+timed sweeps; near 0 means every sweep reused the classes the
+warm-up compiled.
 """
 
 from __future__ import annotations
@@ -21,7 +24,7 @@ import sys
 import time
 
 from data_eng_project_spark.plans import REGISTRY
-from data_eng_project_spark.session import get_session
+from data_eng_project_spark.session import codegen_compiles, get_session
 
 # Timed next to the headline set but totaled apart, so `value` stays the
 # same 21-query series it has been since round 1 (headline set v2).
@@ -86,12 +89,17 @@ def main() -> None:
         .mapInPandas(_ident, schema="id long")
         .write.format("noop").mode("overwrite").save()
     )
-    # One untimed sweep compiles each plan (JIT, whole-stage codegen) and
-    # primes the page cache; cold single shots vary up to 4x (BASELINE.md).
+    # One untimed sweep primes the page cache and compiles each plan's
+    # whole-stage-codegen classes; cold single shots vary up to 4x
+    # (BASELINE.md). The timed sweeps reuse those classes only because
+    # get_session's codegen cache holds a sweep's ~416 of them;
+    # codegen_compiles below shows whether they did.
     time_queries(spark, sf_dir, specs, 1)
 
     j0 = _cpu_jiffies()
+    c0 = codegen_compiles(spark)
     mins = time_queries(spark, sf_dir, specs, 3)
+    compiles = codegen_compiles(spark) - c0
     j1 = _cpu_jiffies()
     steal_pct = None
     if j0 and j1 and j1[0] > j0[0]:
@@ -130,6 +138,7 @@ def main() -> None:
                     "consumers": len(staging.STAGED_CONSUMERS),
                 },
                 "steal_pct": steal_pct,
+                "codegen_compiles": compiles,
             }
         )
     )

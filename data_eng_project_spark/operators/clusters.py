@@ -53,12 +53,14 @@ def connected_components(
     nothing: on the path A(2)-B(3)-C(1) it leaves A at 2. Labels only
     fall, so the hooks finish within diameter + 1 rounds; jumping
     collapses an id-ordered chain in O(log length) rounds, and a
-    near-clique dup graph in one (plus the certifying hook). After
-    ``max_iter`` rounds of both steps the labels are returned as they
-    stand. Per row the work is O((N + E) * rounds). Every lambda reads
-    only accumulator fields: Spark does no common-subexpression
-    elimination inside lambdas, so a lambda that read an array built by
-    another ``transform`` of the same step would rebuild it per element.
+    near-clique dup graph in one (plus the certifying hook). If
+    ``max_iter`` rounds of both steps end before a hook has changed
+    nothing, the query fails with a ``raise_error`` that names
+    ``max_iter``; it never returns unconverged labels. Per row the work
+    is O((N + E) * rounds). Every lambda reads only accumulator fields:
+    Spark does no common-subexpression elimination inside lambdas, so a
+    lambda that read an array built by another ``transform`` of the same
+    step would rebuild it per element.
 
     Jobs. Writing the result runs five Spark jobs whatever the round
     count: the sorted id array, the index join, the per-node grouping,
@@ -128,11 +130,21 @@ def connected_components(
             F.lit(False),
         ),
         step,
-        lambda acc: F.transform(
-            acc["L"],
-            lambda lk, k: F.struct(
-                acc["ids"][k].alias("id"), acc["ids"][lk].alias("comp")
+        lambda acc: F.when(
+            acc["done"],
+            F.transform(
+                acc["L"],
+                lambda lk, k: F.struct(
+                    acc["ids"][k].alias("id"), acc["ids"][lk].alias("comp")
+                ),
             ),
+        ).otherwise(
+            F.raise_error(
+                F.lit(
+                    f"connected_components did not converge within max_iter={int(max_iter)}"
+                    " hook/jump rounds; pass a larger max_iter"
+                )
+            )
         ),
     )
     return graph.select(F.inline(labels))

@@ -15,6 +15,10 @@ Two concerns live here:
    "NULL on failure, never error" (reference ``dags/global_dag.py:111-118``
    — try/except-to-None date parsing), so the engine pins non-ANSI
    evaluation rather than relying on whoever built the session.
+
+``get_session`` also sizes Spark's compiled-class cache to the engine's
+working set (``_CODEGEN_CACHE_ENTRIES``), so a repeated pass reuses its
+whole-stage-codegen classes instead of recompiling them.
 """
 
 from __future__ import annotations
@@ -54,6 +58,20 @@ _RUNTIME_CONFS: dict[str, str] = {
 }
 
 
+# Compiled codegen classes the JVM keeps for reuse. Static
+# conf: spark.conf.set refuses it, so it is set on the builder, not in
+# _RUNTIME_CONFS. Spark's default of 100 is smaller than the engine's
+# repeated loops: one staged_graph pass uses 156 classes and one bench.py
+# sweep about 416, so LRU eviction made every pass recompile its plans
+# with Janino (a reference_etl pass uses 63 and already fit). Measured
+# on a 4-core host (CHANGES.md): staged_graph pass_s 6.94 -> 4.78 s and
+# cpu_s 21.3 -> 13.4 s, medians of 10 alternated perfbench pairs, lower
+# in all 10. 2000 is over 4x the largest working set. A session someone
+# else builds keeps the default; it runs each query once and gains
+# nothing.
+_CODEGEN_CACHE_ENTRIES = 2000
+
+
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
@@ -78,6 +96,15 @@ def prepare(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def codegen_compiles(spark: SparkSession) -> int:
+    """Generated classes (whole-stage code, projections, predicates) that
+    Janino has compiled so far in this session's JVM, on the driver and on
+    local-mode executors. A cache hit does not count, so over a repeated
+    loop this reads the recompiles."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
 def get_session(app_name: str = "data-eng-project-spark", cpus: int | None = None) -> SparkSession:
     """Build (or fetch) a local session with scale-appropriate defaults."""
     cpus = cpus or default_parallelism()
@@ -97,6 +124,7 @@ def get_session(app_name: str = "data-eng-project-spark", cpus: int | None = Non
         # deliberately does NOT go in prepare()/_RUNTIME_CONFS.
         .config("spark.sql.files.maxPartitionBytes", "8m")
         .config("spark.sql.files.openCostInBytes", "1m")
+        .config("spark.sql.codegen.cache.maxEntries", str(_CODEGEN_CACHE_ENTRIES))
     )
     for k, v in _RUNTIME_CONFS.items():
         builder = builder.config(k, v)

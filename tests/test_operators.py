@@ -426,6 +426,25 @@ def test_connected_components_long_path_converges_fast(spark):
     assert got.agg(F.max("comp")).collect()[0][0] == 1
 
 
+def test_connected_components_raises_instead_of_returning_unconverged_labels(spark):
+    """A path whose ids are in random order needs O(n) hook rounds: at
+    300 nodes more than the default max_iter of 25, where the labels
+    would still be wrong. The query must fail, naming max_iter, rather
+    than return them; with room for the rounds it labels every node with
+    the minimum id, as a union-find does."""
+    import random
+
+    from data_eng_project_spark.operators.clusters import connected_components
+
+    ids = list(range(1, 301))
+    random.Random(7).shuffle(ids)
+    edges = spark.createDataFrame(list(zip(ids, ids[1:])), "id_a long, id_b long")
+    with pytest.raises(Exception, match="max_iter=25"):
+        connected_components(edges).collect()
+    got = {r.id: r.comp for r in connected_components(edges, max_iter=1000).collect()}
+    assert got == {i: 1 for i in ids}
+
+
 @given(
     st.lists(
         st.tuples(st.integers(0, 24), st.integers(0, 24)),
