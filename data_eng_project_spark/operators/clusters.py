@@ -22,8 +22,9 @@ billion-edge graph needs the distributed large-star/small-star
 alternation (Kiveris et al., "Connected Components in MapReduce and
 Beyond"), which bounds rounds at O(log n) on any topology.
 
-PageRank reuses the components: it solves each component as one row
-(see ``pagerank``), so its ten rounds cost no jobs of their own.
+PageRank and BFS reuse the components: each solves a component (BFS:
+a component per root) as one row in one ``aggregate`` over the layout
+``_component_rows`` builds, so their rounds cost no jobs of their own.
 """
 
 from __future__ import annotations
@@ -163,6 +164,47 @@ def dedup_cluster_assignments(
     )
 
 
+def _component_rows(
+    edges: DataFrame,
+    src_col: str,
+    dst_col: str,
+    components: DataFrame,
+) -> tuple[DataFrame, DataFrame]:
+    """The layout ``pagerank`` and ``bfs_hops`` iterate over: ``node``
+    (id, comp, nbrs, i), i the node's position in its component's
+    id-ordered node array, and ``rows`` (comp, _nodes), ONE row per
+    component listing (id, ins) in id order, ``ins`` the node's
+    neighbours as (i, 1/out_degree) structs in index order (the graph is
+    symmetric: these are its in-neighbours, and every node has one)."""
+    # Neighbour sets of the symmetrized graph: one aggregation both
+    # dedups parallel edges and yields the out-degree.
+    adj = (
+        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+        .union(edges.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst")))
+        .groupBy("src")
+        .agg(F.collect_set("dst").alias("nbrs"))
+    )
+    node = components.join(adj, F.col("id") == F.col("src")).select(
+        "id",
+        "comp",
+        "nbrs",
+        (F.row_number().over(Window.partitionBy("comp").orderBy("id")) - 1).alias("i"),
+    )
+    rows = (
+        node.select(
+            "comp",
+            F.explode("nbrs").alias("id"),
+            "i",
+            (F.lit(1.0) / F.size("nbrs")).alias("w"),
+        )
+        .groupBy("comp", "id")
+        .agg(F.array_sort(F.collect_list(F.struct("i", "w"))).alias("ins"))
+        .groupBy("comp")
+        .agg(F.array_sort(F.collect_list(F.struct("id", "ins"))).alias("_nodes"))
+    )
+    return node, rows
+
+
 def pagerank(
     edges: DataFrame,
     src_col: str = "id_a",
@@ -180,12 +222,10 @@ def pagerank(
     symmetrized graph has no dangling nodes and the (1−d)/N teleport is
     uniform over all N nodes, so every component keeps mass |c|/N on
     every round and a node's rank depends only on its own component
-    plus N. Each component becomes ONE row — node ids in id order, and
-    per node its neighbours as (index inside the component,
-    1/out_degree) structs — and the ``n_iter`` rounds run as an
-    ``aggregate`` over ``sequence(1, n_iter)`` with the rank array as
-    accumulator (the HOF idiom of kmeans_lloyd). N arrives as a
-    broadcast one-row count.
+    plus N. Each component becomes ONE row (``_component_rows``), and
+    the ``n_iter`` rounds run as an ``aggregate`` over ``sequence(1,
+    n_iter)`` with the rank array as accumulator (the HOF idiom of
+    kmeans_lloyd). N arrives as a broadcast one-row count.
     Building the plan runs no Spark job when ``components`` is given,
     and nothing is persisted or checkpointed; in-mass sums run in
     neighbour-index order, with the same per-term arithmetic as a
@@ -207,38 +247,9 @@ def pagerank(
         raise ValueError(f"pagerank needs n_iter >= 1, got {n_iter=}")
     if components is None:
         components = connected_components(edges, src_col, dst_col)
-    # Neighbour sets of the symmetrized graph: one aggregation both
-    # dedups parallel edges and yields the out-degree.
-    adj = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .union(edges.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst")))
-        .groupBy("src")
-        .agg(F.collect_set("dst").alias("nbrs"))
-    )
-    # i = the node's position in its component's id-ordered node array.
-    node = components.join(adj, F.col("id") == F.col("src")).select(
-        "id",
-        "comp",
-        "nbrs",
-        (F.row_number().over(Window.partitionBy("comp").orderBy("id")) - 1).alias("i"),
-    )
+    node, per_comp = _component_rows(edges, src_col, dst_col, components)
     n_row = node.agg(F.count(F.lit(1)).alias("n"))
-    # Symmetric graph: a node's in-neighbours are its out-neighbours,
-    # each contributing rank * (1 / its own out-degree); every node has
-    # one, so grouping the in-edges by (comp, dst) lists every node.
-    per_comp = (
-        node.select(
-            "comp",
-            F.explode("nbrs").alias("id"),
-            "i",
-            (F.lit(1.0) / F.size("nbrs")).alias("w"),
-        )
-        .groupBy("comp", "id")
-        .agg(F.array_sort(F.collect_list(F.struct("i", "w"))).alias("ins"))
-        .groupBy("comp")
-        .agg(F.array_sort(F.collect_list(F.struct("id", "ins"))).alias("_nodes"))
-        .join(F.broadcast(n_row))
-    )
+    per_comp = per_comp.join(F.broadcast(n_row))
 
     def step(rank, _):
         return F.transform(
@@ -284,13 +295,9 @@ def triangle_stats(
     Returns (id, degree, n_triangles, clustering_coeff) for every node
     in ≥1 edge; coefficient is 0 for degree < 2.
     """
-    # No materialization of the canonical edge list (r13, measured tie:
-    # lc 0.776 s vs no-cache 0.738 s min-of-6 on the staged consumer):
-    # the distinct() ends in an exchange AQE reuses across the three
-    # self-join aliases at runtime, recompute keeps lineage replayable
-    # on executor loss (§5), and dropping the EAGER checkpoint also
-    # stops query CONSTRUCTION from running a job (registry tools build
-    # plans without executing them).
+    # Not materialised: AQE reuses the distinct()'s exchange across the
+    # three self-join aliases, and a checkpoint measured a tie (0.776 s
+    # against 0.738 s uncached, min of 6 on the staged consumer).
     e = (
         edges.select(
             F.least(src_col, dst_col).alias("a"),
@@ -340,6 +347,7 @@ def triangle_stats(
 def bfs_hops(
     edges: DataFrame,
     roots: DataFrame,
+    components: DataFrame,
     root_col: str = "root",
     src_col: str = "id_a",
     dst_col: str = "id_b",
@@ -347,10 +355,12 @@ def bfs_hops(
 ) -> DataFrame:
     """Multi-source BFS over the undirected pair graph: the hop
     (shortest-path) distance from each root to every node it reaches
-    within ``max_hops``. Returns (root, node, hops); a root appears at
-    hops 0, and nodes farther than ``max_hops`` from every root are
-    absent — callers pick the cap, and the SQL-oracle twin applies the
-    identical cap so both engines truncate the same frontier.
+    within ``max_hops``, given the graph's ``components`` (id, comp) as
+    ``connected_components`` returns them. Returns (root, node, hops); a
+    root appears at hops 0, and nodes farther than ``max_hops`` from
+    every root are absent — callers pick the cap, and the SQL-oracle
+    twin applies the identical cap so both engines truncate the same
+    frontier.
 
     For dup graphs this is the "how far from the canonical" diagnostic:
     hop distance from a cluster's kept representative separates direct
@@ -358,51 +368,43 @@ def bfs_hops(
     duplicated through a chain of borderline matches (≥2 hops) — the
     rows a curator re-reviews before an aggressive keep-one policy.
 
-    Scale design: level-synchronous frontier expansion — each round is
-    one equi-join (frontier ⋈ edges, shuffle on node id) plus one
-    anti-join against the visited set, the Pregel BFS as DataFrame
-    algebra. Rounds are bounded by min(graph diameter, max_hops); dup
-    graphs are near-cliques so the frontier empties in a handful of
-    rounds. Lineage is cut per round with a lazy localCheckpoint whose
-    materializing action IS the frontier-empty test (one job per
-    round); the visited set only ever grows by the new frontier, so
-    per-round cost tracks the answer, not the corpus.
+    Solved as ONE row per root over ``pagerank``'s per-component
+    layout: one ``aggregate`` over ``max_hops`` rounds relaxes the
+    distance array ``D[k] = least(D[k], min over neighbours j of
+    D[j] + 1)`` from 0 at the root and NULL elsewhere, so after h rounds
+    D holds exactly the distances ≤ h; NULLs (unreached) are dropped,
+    and a root in no edge is emitted at hop 0 only. Building the plan
+    runs no Spark job, and nothing is persisted or checkpointed. Scale
+    bound: as in ``pagerank``, one component's adjacency must fit in one
+    row of one task; per root the work is O((N + E) * max_hops).
     """
-    sym = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .union(edges.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst")))
+    _, rows = _component_rows(edges, src_col, dst_col, components)
+    start = (
+        roots.select(F.col(root_col).alias("root"))
         .distinct()
-        .localCheckpoint()
+        .join(components, F.col("root") == F.col("id"), "left")
+        .join(rows, "comp", "left")
     )
-    dist = (
-        roots.select(
-            F.col(root_col).alias("root"),
-            F.col(root_col).alias("node"),
-            F.lit(0).cast("int").alias("hops"),
+
+    def step(dist, _):
+        return F.transform(
+            "_nodes",
+            lambda nd, k: F.aggregate(
+                nd["ins"], dist[k], lambda m, e: F.least(m, dist[e["i"]] + 1)
+            ),
         )
-        .distinct()
-        .localCheckpoint()
+
+    d0 = F.transform("_nodes", lambda nd: F.when(nd["id"] == F.col("root"), F.lit(0)))
+    dist = F.aggregate(F.array_repeat(F.lit(0), int(max_hops)), d0, step)
+    reached = F.zip_with(
+        "_nodes", dist, lambda nd, d: F.struct(nd["id"].alias("node"), d.alias("hops"))
     )
-    frontier = dist
-    for h in range(1, int(max_hops) + 1):
-        reached = (
-            frontier.join(sym, frontier["node"] == sym["src"])
-            .select("root", F.col("dst").alias("node"))
-            .distinct()
-        )
-        new = (
-            reached.join(dist.select("root", "node"), ["root", "node"], "left_anti")
-            .withColumn("hops", F.lit(h).cast("int"))
-            .localCheckpoint(eager=False)
-        )
-        # The count is the one action that both materializes the round
-        # and decides termination — BFS level-synchrony needs it, and
-        # it is bounded by max_hops driver round-trips.
-        if new.count() == 0:
-            break
-        dist = dist.union(new).localCheckpoint(eager=False)
-        frontier = new
-    return dist
+    # A root in no edge is absent from every component row: hop 0 only.
+    found = F.array_contains(F.col("_nodes.id"), F.col("root"))
+    alone = F.array(F.struct(F.col("root").alias("node"), F.lit(0).alias("hops")))
+    return start.select("root", F.inline(F.when(found, reached).otherwise(alone))).where(
+        F.col("hops").isNotNull()
+    )
 
 
 def common_neighbor_stats(
@@ -418,60 +420,43 @@ def common_neighbor_stats(
     a lone bridge between otherwise-unrelated documents — the edge a
     curator inspects before transitively collapsing two clusters.
 
-    N(x) is the raw adjacency set (a ∈ N(b) and b ∈ N(a), no self
-    loops), so |N(a)∪N(b)| = deg(a) + deg(b) − common. Enumeration is
-    two equi-joins of the edge list against the symmetrized adjacency
-    (wedge counting on the pair's endpoints) — candidates only from
-    actual adjacency, never a cross join; fan-out is bounded by the max
-    cluster size exactly like triangle_stats.
+    N(x) lists the neighbours of x over the distinct input edges taken
+    both ways (a pair given as (a,b) and (b,a), or a self loop, lists
+    its neighbour twice), so |N(a)∪N(b)| = |N(a)| + |N(b)| − common.
+    Each list is collected once and attached to both ends of every edge
+    by two equi-joins; common is the multiset intersection size
+    Σ_w mult_a(w)·mult_b(w), what a wedge join counts, at deg(a)·deg(b)
+    comparisons per edge (a wedge join: deg(a) hash probes). On the 10x
+    sf0.1 replica (max degree 39, 4-core host) it ran 1.96 s to the
+    checkpointed wedge join's 2.43 s (CHANGES.md); dup cliques far
+    larger than that favour the wedge join.
 
     Returns (id_a, id_b, common_neighbors, neighbor_jaccard) for every
-    input edge (zero-common edges included).
+    distinct input edge (zero-common edges included).
     """
-    # Materialize-once is a measured 15% win here (lc 0.587 s vs
-    # no-cache 0.689 s min-of-6): `e` fans out five ways (both union
-    # arms of sym, the wedge join's probe, and the final attach), and
-    # only two of those share a reusable exchange. Documented §5 trade:
-    # localCheckpoint truncates lineage (an executor loss after
-    # materialization fails the query instead of recomputing) — taken
-    # deliberately for the measured win; LAZY so building the plan
-    # stays side-effect-free (the materializing action is the query's
-    # own first job).
-    e = edges.select(src_col, dst_col).distinct().localCheckpoint(eager=False)
-    sym = e.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).union(e.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst")))
-    deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    wedges = (
-        e.join(
-            sym.select(F.col("src").alias(src_col), F.col("dst").alias("_w1")),
-            src_col,
-        )
-        .join(
-            sym.select(
-                F.col("src").alias(dst_col), F.col("dst").alias("_w1")
-            ),
-            [dst_col, "_w1"],
-        )
-        .groupBy(src_col, dst_col)
-        .agg(F.count(F.lit(1)).alias("cn"))
+    e = edges.select(src_col, dst_col).distinct()
+    nbrs = (
+        e.select(F.col(src_col).alias("_x"), F.col(dst_col).alias("_y"))
+        .union(e.select(F.col(dst_col).alias("_x"), F.col(src_col).alias("_y")))
+        .groupBy("_x")
+        .agg(F.collect_list("_y").alias("_n"))
     )
-    out = (
-        e.join(wedges, [src_col, dst_col], "left")
-        .join(deg.select(F.col("src").alias(src_col), F.col("deg").alias("_da")), src_col)
-        .join(deg.select(F.col("src").alias(dst_col), F.col("deg").alias("_db")), dst_col)
+    ends = e.join(nbrs.toDF(src_col, "_na"), src_col).join(nbrs.toDF(dst_col, "_nb"), dst_col)
+    # Each entry of a's list counts its copies in b's list.
+    cn = F.aggregate(
+        "_na",
+        F.lit(0).cast("bigint"),
+        lambda acc, w: acc + F.size(F.filter("_nb", lambda x: x == w)),
     )
-    cn = F.coalesce("cn", F.lit(0))
+    out = ends.select(
+        src_col, dst_col, cn.alias("cn"), (F.size("_na") + F.size("_nb")).alias("deg")
+    )
     return out.select(
         src_col,
         dst_col,
-        cn.cast("bigint").alias("common_neighbors"),
+        F.col("cn").alias("common_neighbors"),
         (
-            F.round(
-                cn.cast("double")
-                / (F.col("_da") + F.col("_db") - cn).cast("double"),
-                6,
-            )
+            F.round(F.col("cn").cast("double") / (F.col("deg") - F.col("cn")).cast("double"), 6)
             + F.lit(0.0)
         ).alias("neighbor_jaccard"),
     )

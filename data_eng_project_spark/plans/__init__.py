@@ -46,7 +46,8 @@ _GRADED_WINDOW = [
     "streaming_interval_join",
     "streaming_dedup_events",
     "customer_nation_region",
-    # 2. r12/r13 changed-lineage queries, certified on the rewritten form:
+    # 2. Changed-lineage queries (r12/r13 rewrites, the one-row graph
+    #    consumers), certified on the rewritten form:
     "rrf_hybrid_search",
     "asof_latest_order",
     "winsorize_length_bounds",
@@ -55,7 +56,9 @@ _GRADED_WINDOW = [
     "dedup_simhash_collapsed",
     "dedup_containment_pairs_collapsed",
     "soft_dedup_weights",
-    # 3. The 34 oldest round-8-latest rows, in registry order:
+    "dup_graph_bfs_hops",
+    "dup_graph_common_neighbors",
+    # 3. The 32 oldest round-8-latest rows, in registry order:
     "q3_top_unshipped_orders",
     "rollup_order_status",
     "sessionize_events",
@@ -88,8 +91,6 @@ _GRADED_WINDOW = [
     "priority_sample_by_source",
     "split_exact_quota",
     "streaming_asof_enrich",
-    "pca_trace_report",
-    "orders_not_in_ledger",
 ]
 
 

@@ -868,14 +868,14 @@ _BFS_MAX_HOPS = 12
 )
 def dup_graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hop distance from each near-dup cluster's canonical document to
-    every member (level-synchronous BFS — operators/clusters.bfs_hops):
-    1 hop = direct near-dup of the kept representative, ≥2 hops = only
-    transitively duplicated through a chain of borderline matches — the
-    rows a curator re-reviews before an aggressive keep-one policy.
-    Consumes the STAGED pair graph and components (pipelines/staging.py),
-    so the similarity join and the component fixpoint are shared with
-    the other five graph consumers, and the BFS itself re-scans a
-    parquet edge list each round."""
+    every member (operators/clusters.bfs_hops): 1 hop = direct near-dup
+    of the kept representative, ≥2 hops = only transitively duplicated
+    through a chain of borderline matches — the rows a curator re-reviews
+    before an aggressive keep-one policy. Consumes the STAGED pair graph
+    and components (pipelines/staging.py), so the similarity join and the
+    component labels are shared with the other graph consumers; the BFS
+    runs every round over one row per component, so building the plan
+    runs no job."""
     from data_eng_project_spark.pipelines.staging import (
         dup_components,
         near_dup_pairs,
@@ -884,7 +884,7 @@ def dup_graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = near_dup_pairs(spark, sf_dir, n=3, threshold=JACCARD_THRESHOLD)
     comps = dup_components(spark, sf_dir, n=3, threshold=JACCARD_THRESHOLD)
     roots = comps.select(F.col("comp").alias("root")).distinct()
-    hops = bfs_hops(pairs, roots, max_hops=_BFS_MAX_HOPS)
+    hops = bfs_hops(pairs, roots, comps, max_hops=_BFS_MAX_HOPS)
     return comps.join(
         hops,
         (comps["id"] == hops["node"]) & (comps["comp"] == hops["root"]),
@@ -973,9 +973,9 @@ def dup_graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge sits inside a dense dup family, zero means a lone bridge
     between otherwise-unrelated documents (the edge a curator inspects
     before transitively collapsing two clusters; triangles score NODES,
-    this scores EDGES). Wedge counting via two equi-joins over the
-    STAGED pair graph (pipelines/staging.py) — see
-    operators/clusters.common_neighbor_stats."""
+    this scores EDGES). Each node's neighbour list is attached to both
+    ends of every edge of the STAGED pair graph (pipelines/staging.py)
+    by two equi-joins — see operators/clusters.common_neighbor_stats."""
     from data_eng_project_spark.pipelines.staging import near_dup_pairs
 
     pairs = near_dup_pairs(spark, sf_dir, n=3, threshold=JACCARD_THRESHOLD)

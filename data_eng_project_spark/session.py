@@ -105,9 +105,10 @@ def codegen_compiles(spark: SparkSession) -> int:
     return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
-def get_session(app_name: str = "data-eng-project-spark", cpus: int | None = None) -> SparkSession:
-    """Build (or fetch) a local session with scale-appropriate defaults."""
-    cpus = cpus or default_parallelism()
+def get_session(app_name: str = "data-eng-project-spark") -> SparkSession:
+    """Build (or fetch) a local session with scale-appropriate defaults,
+    as wide as ``default_parallelism()``."""
+    cpus = default_parallelism()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
@@ -125,6 +126,10 @@ def get_session(app_name: str = "data-eng-project-spark", cpus: int | None = Non
         .config("spark.sql.files.maxPartitionBytes", "8m")
         .config("spark.sql.files.openCostInBytes", "1m")
         .config("spark.sql.codegen.cache.maxEntries", str(_CODEGEN_CACHE_ENTRIES))
+        # Class names without codegen stage ids: AQE numbers stages in
+        # planning order, which varies by run, so a rerun that swapped two
+        # stages recompiled both (4 classes of pagerank_dup_docs, sf0.001).
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     for k, v in _RUNTIME_CONFS.items():
         builder = builder.config(k, v)

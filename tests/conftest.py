@@ -24,7 +24,7 @@ SF_CORRECT = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_session("tests", cpus=8)
+    s = get_session("tests")
     yield s
 
 

@@ -298,6 +298,33 @@ def test_pagerank_with_components_builds_without_jobs_or_caches(spark):
     assert sc._jsc.getPersistentRDDs().size() <= persisted
 
 
+def test_staged_graph_consumers_build_without_jobs_or_caches(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """Over an already-staged pair graph, the BFS and common-neighbour
+    queries build their plans without running a Spark job, and running
+    them leaves nothing persisted that ``clearCache()`` does not free
+    (a local checkpoint per BFS round did both)."""
+    from data_eng_project_spark.plans import REGISTRY
+
+    monkeypatch.setenv("SPARK_GRAFT_STAGE_DIR", str(tmp_path / "stage"))
+    names = ("dup_graph_bfs_hops", "dup_graph_common_neighbors")
+    for name in names:  # stages the pair graph and its components
+        REGISTRY[name].fn(spark, sf_dir)
+    sc = spark.sparkContext
+    persisted = sc._jsc.getPersistentRDDs().size()
+    group = "graph-consumers-build"
+    sc.setJobGroup(group, group)
+    try:
+        frames = [REGISTRY[name].fn(spark, sf_dir) for name in names]
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert all(len(df.collect()) > 0 for df in frames)
+    spark.catalog.clearCache()
+    assert sc._jsc.getPersistentRDDs().size() <= persisted
+
+
 def test_containment_catches_what_jaccard_misses(spark):
     from data_eng_project_spark.operators.dedup import (
         ngram_containment_pairs,
@@ -450,7 +477,7 @@ def test_phrase_occurrences_counts_overlaps():
     from data_eng_project_spark.operators.textops import phrase_occurrences
     from data_eng_project_spark.session import get_session
 
-    spark = get_session("tests", cpus=8)
+    spark = get_session("tests")
     docs = spark.createDataFrame(
         [(1, "w w w w"), (2, "a w w b"), (3, "w x w")], "doc_id long, text string"
     )

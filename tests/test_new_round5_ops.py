@@ -12,7 +12,7 @@ import math
 
 from pyspark.sql import functions as F
 
-from data_eng_project_spark.operators.clusters import bfs_hops
+from data_eng_project_spark.operators.clusters import bfs_hops, connected_components
 from data_eng_project_spark.operators.curation import collocation_lift
 from data_eng_project_spark.operators.datasetops import sorted_neighborhood_pairs
 from data_eng_project_spark.operators.temporal import holt_linear_per_key
@@ -26,11 +26,22 @@ def test_bfs_hops_path_graph(spark):
     roots = spark.createDataFrame([(1,), (10,)], ["root"])
     got = {
         (r["root"], r["node"]): r["hops"]
-        for r in bfs_hops(edges, roots).collect()
+        for r in bfs_hops(edges, roots, connected_components(edges)).collect()
     }
     assert got == {
         (1, 1): 0, (1, 2): 1, (1, 3): 2, (1, 4): 3, (1, 5): 4,
         (10, 10): 0, (10, 11): 1,
+    }
+    # Two roots in one component, and a root in no edge (hop 0 only).
+    roots = spark.createDataFrame([(1,), (4,), (42,)], ["root"])
+    got = {
+        (r["root"], r["node"]): r["hops"]
+        for r in bfs_hops(edges, roots, connected_components(edges)).collect()
+    }
+    assert got == {
+        (1, 1): 0, (1, 2): 1, (1, 3): 2, (1, 4): 3, (1, 5): 4,
+        (4, 4): 0, (4, 3): 1, (4, 5): 1, (4, 2): 2, (4, 1): 3,
+        (42, 42): 0,
     }
 
 
@@ -38,14 +49,16 @@ def test_bfs_hops_takes_shortest_path_not_first_found(spark):
     # Triangle with a long detour: 1-2, 2-3, plus direct 1-3 → hops(3)=1.
     edges = spark.createDataFrame([(1, 2), (2, 3), (1, 3)], ["id_a", "id_b"])
     roots = spark.createDataFrame([(1,)], ["root"])
-    got = {r["node"]: r["hops"] for r in bfs_hops(edges, roots).collect()}
+    hops = bfs_hops(edges, roots, connected_components(edges))
+    got = {r["node"]: r["hops"] for r in hops.collect()}
     assert got == {1: 0, 2: 1, 3: 1}
 
 
 def test_bfs_hops_respects_max_hops_cap(spark):
     edges = spark.createDataFrame([(1, 2), (2, 3), (3, 4)], ["id_a", "id_b"])
     roots = spark.createDataFrame([(1,)], ["root"])
-    got = {r["node"]: r["hops"] for r in bfs_hops(edges, roots, max_hops=2).collect()}
+    hops = bfs_hops(edges, roots, connected_components(edges), max_hops=2)
+    got = {r["node"]: r["hops"] for r in hops.collect()}
     assert got == {1: 0, 2: 1, 3: 2}  # node 4 is beyond the cap → absent
 
 
@@ -157,6 +170,20 @@ def test_common_neighbor_stats_hand_graph(spark):
     # Edge (3,4): N(3)={1,2,4}, N(4)={1,3} → common {1}.
     assert got[(3, 4)] == (1, round(1 / (3 + 2 - 1), 6))
     assert len(got) == 5
+
+    # (1,2) listed both ways: each direction is an edge, and each end
+    # lists the other twice, so N(1) = {2, 2, 3} and N(2) = {1, 1, 3}.
+    edges = spark.createDataFrame([(1, 2), (2, 1), (2, 3), (1, 3)], ["id_a", "id_b"])
+    got = {
+        (r["id_a"], r["id_b"]): (r["common_neighbors"], r["neighbor_jaccard"])
+        for r in common_neighbor_stats(edges).collect()
+    }
+    assert got == {
+        (1, 2): (1, round(1 / (3 + 3 - 1), 6)),
+        (2, 1): (1, round(1 / (3 + 3 - 1), 6)),
+        (2, 3): (2, round(2 / (3 + 2 - 2), 6)),
+        (1, 3): (2, round(2 / (3 + 2 - 2), 6)),
+    }
 
 
 def test_common_neighbor_stats_zero_common_edge_kept(spark):

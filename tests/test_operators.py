@@ -1117,7 +1117,7 @@ def test_rollup_merge_associative_any_split(nsplits):
     )
     from data_eng_project_spark.session import get_session
 
-    spark = get_session("tests", cpus=8)
+    spark = get_session("tests")
     rows = [
         (i, "t" + str(i % 2), dt.datetime(2024, 2, 1, i % 4), float(i) * 0.31)
         for i in range(120)

@@ -431,8 +431,8 @@ def test_xcorr_sufficient_stats_single_hourly_agg(spark):
 
 
 def test_dup_graph_common_neighbors_equi_joins_only(spark):
-    """Wedge counting must be adjacency equi-joins over the staged pair
-    parquet — no cartesian, no Python."""
+    """Each node's neighbour list must reach both ends of an edge of the
+    staged pair parquet through equi-joins — no cartesian, no Python."""
     plan = _plan(spark, "dup_graph_common_neighbors")
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan

@@ -251,9 +251,10 @@ def test_second_staged_pass_reuses_compiled_classes(spark, sf_dir, tmp_path, mon
     generated classes an earlier pass compiled. One pass uses
     153 classes at sf0.001, more than Spark's default cache of 100 holds,
     so under the default LRU eviction the second pass recompiles about
-    138 of them. The bound is 5% of a pass's classes: an AQE re-plan can
-    pick a join shape no earlier pass compiled (4 classes seen in
-    ``pagerank_dup_docs``). The first pass's own count depends on which
+    138 of them. The bound is 5% of a pass's classes: before class names
+    dropped their codegen stage ids (``get_session``), AQE numbering a
+    rerun's stages in another order recompiled 4 classes of
+    ``pagerank_dup_docs``. The first pass's own count depends on which
     tests ran before it in the shared session, so it is only reported."""
     from data_eng_project_spark.plans import REGISTRY
     from data_eng_project_spark.session import codegen_compiles
